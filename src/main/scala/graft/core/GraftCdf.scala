@@ -6,9 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInterna
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,11 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     and the feed serves them like any other leg.
   *
   * Planning is change-proportional: insert/postimage legs read only
-  * the files their commit added; delete/preimage legs are single-file
-  * splits over only the files whose DV changed, shipping the commit's
-  * and parent's sidecar PATHS (readers load the delete-proportional
-  * varint blobs and keep positions in the diff). Nothing scales with
-  * the lake. */
+  * the files their commit added; delete/preimage legs pack only the
+  * files whose DV changed, each split shipping its files' commit and
+  * parent sidecar PATHS (readers load the delete-proportional varint
+  * blobs and keep positions in the diff). Nothing scales with the
+  * lake. Splits and readers come from [[GraftRead]], the planner the
+  * plain scan uses. */
 private[core] object GraftCdf {
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
@@ -121,30 +119,16 @@ private[core] object GraftCdf {
   }
 }
 
-/** One CDF split: a leg's files plus its constant columns and, for
-  * position legs, the commit's and parent's sidecar paths (null =
-  * none). Position legs are always single-file (row indexes are
-  * file-absolute). `tsMicros` is the commit's wall time (null on
-  * pre-`#ts:` manifests); a [[GraftCdf.CdcLegType]] split reads
+/** One CDF split: a leg's files plus its constant columns. A position
+  * leg (delete/preimage) packs many DV'd files per split, each carrying
+  * its own (cur, prevOrNull) sidecar pair in `dvByRel`, keyed by the
+  * file's lake-relative path; every other leg has an empty map. Packing
+  * keeps a MoR delete that touches every file of a small-file lake from
+  * planning one task per file (the r17 q184 census: 242-task scan
+  * stages over KB windows). `tsMicros` is the commit's wall time (null
+  * on pre-`#ts:` manifests); a [[GraftCdf.CdcLegType]] split reads
   * commit-time change sidecars, whose change type is stored per row. */
 private[core] final class CdfFilePartition(
-    idx: Int, fs: Array[PartitionedFile],
-    val changeType: String, val commitVersion: Long,
-    val tsMicros: java.lang.Long,
-    val dvCur: String, val dvPrev: String)
-    extends FilePartition(idx, fs)
-
-/** A PACKED position leg (r17): many DV'd files in one split, each
-  * carrying its own (cur, prevOrNull) sidecar pair keyed by the file's
-  * lake-relative path. Position legs were single-file splits before —
-  * correct, but a MoR delete whose predicate touches every file of a
-  * small-file lake then plans one task PER FILE (the r17 q184 census:
-  * 242-task scan stages over KB windows, re-run per downstream stage
-  * once the micro-batch was persisted). The reader chains one inner
-  * single-file reader per packed file, so row indexes stay
-  * file-absolute and each file's own sidecars apply — same rows, ~32×
-  * fewer tasks at the openCost packing bound. */
-private[core] final class CdfDvPackedFilePartition(
     idx: Int, fs: Array[PartitionedFile],
     val changeType: String, val commitVersion: Long,
     val tsMicros: java.lang.Long,
@@ -244,59 +228,9 @@ private[graft] final case class GraftCdfScan(table: GraftCdfTable,
   private def partitionFields: Array[StructField] =
     table.partitionCol.toArray.flatMap(c => table.lakeSchema.fields.find(_.name == c))
 
-  // path → PartitionedFile with the partition value decoded from the
-  // directory name — same decode as GraftScan's (pinned there; the CDF
-  // carries a copy because its splits are built outside any GraftScan)
-  private def partitionValueRow(file: String): InternalRow = {
-    val part = partitionFields
-    // change sidecars are unpartitioned (their partition column is a
-    // plain data column) — no directory value to decode
-    if (part.isEmpty || file.startsWith(ManifestLake.CdfDir + "/")) InternalRow.empty
-    else {
-      val raw = GraftLake.unescapePartitionValue(
-        file.takeWhile(_ != '/').dropWhile(_ != '=').drop(1))
-      val v: Any =
-        if (raw == "__HIVE_DEFAULT_PARTITION__") null
-        else part.head.dataType match {
-          case StringType  => UTF8String.fromString(raw)
-          case LongType    => raw.toLong
-          case IntegerType => raw.toInt
-          case ShortType   => raw.toShort
-          case ByteType    => raw.toByte
-          case BooleanType => raw.toBoolean
-          case DoubleType  => raw.toDouble
-          case FloatType   => raw.toFloat
-          case DateType    => java.time.LocalDate.parse(raw).toEpochDay.toInt
-          case other => throw new IllegalStateException(
-            s"unsupported partition type $other on the change feed")
-        }
-      new GenericInternalRow(Array(v))
-    }
-  }
-
-  private def pfOf(rel: String,
-                   sizes: Map[String, ManifestLake.FileSize]): PartitionedFile = {
-    val p = java.nio.file.Paths.get(table.dir).resolve(rel)
-    // size/mtime from the window's manifests when recorded (zero
-    // filesystem calls); statted fallback for pre-size manifests
-    val (size, mtime) = sizes.get(rel) match {
-      case Some(z) => (z.bytes, z.mtime)
-      case None =>
-        ManifestLake.planStatCalls.incrementAndGet()
-        (java.nio.file.Files.size(p),
-          java.nio.file.Files.getLastModifiedTime(p).toMillis)
-    }
-    new PartitionedFile(
-      partitionValueRow(rel),
-      org.apache.spark.paths.SparkPath.fromPathString(p.toString),
-      0L, size, Array.empty[String],
-      mtime, size,
-      Map.empty[String, Any])
-  }
-
-  /** The window's change-proportional splits: bin-packed multi-file
-    * splits for insert/postimage legs, single-file sidecar-carrying
-    * splits for delete/preimage legs. */
+  /** The window's change-proportional splits ([[GraftRead.toSplits]]):
+    * bin-packed splits for every leg; a position leg's splits also
+    * carry their files' sidecar pairs. */
   private[core] def planWindow(from: Long, to: Long): Array[InputPartition] = {
     val spark = SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException("no active SparkSession"))
@@ -305,6 +239,7 @@ private[graft] final case class GraftCdfScan(table: GraftCdfTable,
         throw new IllegalStateException(
           s"manifest v$v of ${table.dir} is missing (retired by vacuum?) — " +
             "the change feed must run inside the retention window"))
+    val partField = partitionFields.headOption
     var idx = -1
     def nextIdx(): Int = { idx += 1; idx }
     // carry cur → prev so each version's manifest resolves ONCE per
@@ -318,47 +253,24 @@ private[graft] final case class GraftCdfScan(table: GraftCdfTable,
       prev = cur
       val ts: java.lang.Long =
         cur.tsMillis.map(m => java.lang.Long.valueOf(m * 1000L)).orNull
+      // size/mtime from the window's manifests
       val legSizes = legsPrev.sizes ++ cur.sizes
-      // charge openCostInBytes per file exactly as Spark's own
-      // maxSplitBytes overload does — without it a small-file leg
-      // degenerates to one task per file (see GraftScan.planFiles) —
-      // and break files ABOVE the split size into byte ranges (the
-      // temporary row-index column stays FILE-absolute under ranges,
-      // so position legs' sidecar math applies unchanged)
-      def toSplits(files: Vector[String]): Seq[FilePartition] = {
-        val whole = files.map(pfOf(_, legSizes))
-        val openCost = spark.sessionState.conf.filesOpenCostInBytes
-        val msb = FilePartition.maxSplitBytes(
-          spark, whole.map(_.length + openCost).sum)
-        val pfs = whole.flatMap { pf =>
-          if (pf.length <= msb) Seq(pf)
-          else (0L until pf.length by msb).map { off =>
-            new PartitionedFile(pf.partitionValues, pf.filePath, off,
-              math.min(msb, pf.length - off), Array.empty[String],
-              pf.modificationTime, pf.fileSize, Map.empty[String, Any])
-          }
+      GraftCdf.legsOf(table.dir, v, legsPrev, cur).flatMap { case (changeType, files, dvs) =>
+        GraftRead.toSplits(spark, files.map { rel =>
+          // change sidecars are unpartitioned (their partition column
+          // is a plain data column) — no directory value to decode
+          val field = if (rel.startsWith(ManifestLake.CdfDir + "/")) None else partField
+          GraftRead.partitionedFile(table.dir, rel, legSizes,
+            GraftRead.partitionRow(rel, field))
+        }).map { fp =>
+          val m = if (dvs.isEmpty) Map.empty[String, (String, String)]
+                  else fp.files.map { pf =>
+                    val rel = ManifestLake.relFromUri(pf.filePath.toString)
+                    val (curDv, prevDv) = dvs(rel)
+                    rel -> (curDv, prevDv.orNull)
+                  }.toMap
+          new CdfFilePartition(nextIdx(), fp.files, changeType, v, ts, m)
         }
-        FilePartition.getFilePartitions(spark, pfs, msb)
-      }
-      GraftCdf.legsOf(table.dir, v, legsPrev, cur).flatMap {
-        case (changeType, files, dvs) if dvs.isEmpty =>
-          toSplits(files)
-            .map(fp => new CdfFilePartition(nextIdx(), fp.files,
-              changeType, v, ts, null, null))
-        case (changeType, files, dvs) =>
-          // pack DV'd files like any other leg; each packed split
-          // carries its files' own sidecar pairs and the reader
-          // applies them file by file
-          toSplits(files)
-            .map { fp =>
-              val m = fp.files.map { pf =>
-                val rel = ManifestLake.relFromUri(pf.filePath.toString)
-                val (curDv, prevDv) = dvs(rel)
-                rel -> (curDv, prevDv.orNull)
-              }.toMap
-              new CdfDvPackedFilePartition(nextIdx(), fp.files,
-                changeType, v, ts, m)
-            }
       }
     }
   }
@@ -366,101 +278,25 @@ private[graft] final case class GraftCdfScan(table: GraftCdfTable,
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException("no active SparkSession"))
-    val part = partitionFields
+    val part = StructType(partitionFields)
     val dataSchema = StructType(
       table.lakeSchema.fields.filterNot(f => table.partitionCol.contains(f.name)))
-    val sqlConf = spark.sessionState.conf
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetWriteSupport}
-    import org.apache.spark.sql.internal.SQLConf
-    // same conf recipe as GraftScan.createReaderFactory's mkFactory —
-    // the entries ParquetScan prepares for the stock factory
-    def mkFactory(requested: StructType): ParquetPartitionReaderFactory = {
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      hadoopConf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-        classOf[ParquetReadSupport].getName)
-      hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
-      hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, requested.json)
-      hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
-      hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
-        sqlConf.nestedSchemaPruningEnabled)
-      hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
-      ParquetWriteSupport.setSchema(requested, hadoopConf)
-      hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
-        sqlConf.isParquetBinaryAsString)
-      hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
-        sqlConf.isParquetINT96AsTimestamp)
-      hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
-        sqlConf.getConf(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED))
-      hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
-        sqlConf.getConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG))
-      hadoopConf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key,
-        sqlConf.getConf(SQLConf.PARQUET_FIELD_ID_READ_ENABLED))
-      hadoopConf.setBoolean(SQLConf.IGNORE_MISSING_PARQUET_FIELD_ID.key,
-        sqlConf.getConf(SQLConf.IGNORE_MISSING_PARQUET_FIELD_ID))
-      ParquetPartitionReaderFactory(
-        spark.sessionState.conf,
-        spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(hadoopConf)),
-        dataSchema,
-        requested,
-        StructType(part),
-        Array.empty[Filter],
-        None,
-        new ParquetOptions(Map.empty[String, String], spark.sessionState.conf))
-    }
-    val idxField = StructField(
-      ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true)
+    val withIdx = StructType(dataSchema.fields :+ GraftRead.RowIndexField)
     // commit-time change sidecars: unpartitioned, full lake columns as
     // data plus the STORED change type — a third factory with no
-    // partition schema (the generic mkFactory recipe would interleave
-    // the partition fields this leg doesn't have)
+    // partition schema (the data legs' factories would interleave the
+    // partition fields this leg doesn't have)
     val cdcSchema = StructType(table.lakeSchema.fields :+
       StructField(GraftCdf.ChangeTypeCol, StringType, nullable = false))
-    def mkCdcFactory(): ParquetPartitionReaderFactory = {
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      hadoopConf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-        classOf[ParquetReadSupport].getName)
-      hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, cdcSchema.json)
-      hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, cdcSchema.json)
-      hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
-      hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
-        sqlConf.nestedSchemaPruningEnabled)
-      hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
-      ParquetWriteSupport.setSchema(cdcSchema, hadoopConf)
-      hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
-        sqlConf.isParquetBinaryAsString)
-      hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
-        sqlConf.isParquetINT96AsTimestamp)
-      hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
-        sqlConf.getConf(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED))
-      hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
-        sqlConf.getConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG))
-      hadoopConf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key,
-        sqlConf.getConf(SQLConf.PARQUET_FIELD_ID_READ_ENABLED))
-      hadoopConf.setBoolean(SQLConf.IGNORE_MISSING_PARQUET_FIELD_ID.key,
-        sqlConf.getConf(SQLConf.IGNORE_MISSING_PARQUET_FIELD_ID))
-      ParquetPartitionReaderFactory(
-        spark.sessionState.conf,
-        spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(hadoopConf)),
-        cdcSchema,
-        cdcSchema,
-        StructType(Nil),
-        Array.empty[Filter],
-        None,
-        new ParquetOptions(Map.empty[String, String], spark.sessionState.conf))
-    }
     new CdfReaderFactory(
-      plain = mkFactory(dataSchema),
-      withIdx = mkFactory(StructType(dataSchema.fields :+ idxField)),
-      cdc = mkCdcFactory(),
+      plain = GraftRead.parquetFactory(spark, dataSchema, dataSchema, part, Array.empty),
+      withIdx = GraftRead.parquetFactory(spark, dataSchema, withIdx, part, Array.empty),
+      cdc = GraftRead.parquetFactory(spark, cdcSchema, cdcSchema, StructType(Nil), Array.empty),
       lakeDir = table.dir,
-      conf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())),
+      conf = GraftRead.sidecarConf(spark),
       // physical layouts the factories emit (requested ++ part)
       plainPhysical = StructType(dataSchema.fields ++ part),
-      idxPhysical = StructType((dataSchema.fields :+ idxField) ++ part),
+      idxPhysical = StructType(withIdx.fields ++ part),
       cdcPhysical = cdcSchema,
       idxPos = dataSchema.length,
       out = readSchema())
@@ -468,13 +304,14 @@ private[graft] final case class GraftCdfScan(table: GraftCdfTable,
 }
 
 /** Wraps the stock parquet readers: appends the leg's constant
-  * `_change_type`/`_commit_version`/`_commit_timestamp` columns,
-  * permutes into the output order, and — on position legs — keeps
-  * exactly the rows whose file-absolute index is in the commit's
-  * sidecar DIFF (in cur, not in prev), loading the delete-proportional
-  * blobs once per split. [[GraftCdf.CdcLegType]] splits read `_cdf/`
-  * change sidecars through the `cdc` factory instead: their change
-  * type is a STORED column (taken from the file, not the constants). */
+  * `_change_type`/`_commit_version`/`_commit_timestamp` columns and
+  * permutes into the output order. Position legs read through
+  * [[DvChainReader]], keeping exactly the rows whose file-absolute
+  * index is in their file's sidecar DIFF (in cur, not in prev), the
+  * delete-proportional blobs loaded once per file.
+  * [[GraftCdf.CdcLegType]] splits read `_cdf/` change sidecars through
+  * the `cdc` factory instead: their change type is a STORED column
+  * (taken from the file, not the constants). */
 private[core] final class CdfReaderFactory(
     plain: PartitionReaderFactory, withIdx: PartitionReaderFactory,
     cdc: PartitionReaderFactory,
@@ -508,104 +345,30 @@ private[core] final class CdfReaderFactory(
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    partition match {
-      case p: CdfDvPackedFilePartition => return packedDvReader(p)
-      case _ => ()
-    }
     val c = partition.asInstanceOf[CdfFilePartition]
     val consts = new GenericInternalRow(Array[Any](
       UTF8String.fromString(c.changeType), c.commitVersion,
       if (c.tsMicros == null) null else c.tsMicros.longValue()))
     val joined = new JoinedRow
-    if (c.changeType == GraftCdf.CdcLegType) {
-      val inner = cdc.createReader(partition)
-      val proj = projection(cdcPhysical)
-      new PartitionReader[InternalRow] {
-        override def next(): Boolean = inner.next()
-        override def get(): InternalRow = proj(joined(inner.get(), consts))
-        override def close(): Unit = inner.close()
-      }
-    } else if (c.dvCur == null) {
-      val inner = plain.createReader(partition)
-      val proj = projection(plainPhysical)
-      new PartitionReader[InternalRow] {
-        override def next(): Boolean = inner.next()
-        override def get(): InternalRow = proj(joined(inner.get(), consts))
-        override def close(): Unit = inner.close()
-      }
-    } else {
-      val inner = withIdx.createReader(partition)
+    if (c.dvByRel.nonEmpty) {
       val proj = projection(idxPhysical) // idx never referenced by `out`
-      val cur = DvStore.read(lakeDir, c.dvCur, conf.value.value)
-      val prev = if (c.dvPrev == null) Array.empty[Long]
-                 else DvStore.read(lakeDir, c.dvPrev, conf.value.value)
+      new DvChainReader(c, withIdx, idxPos, pf => {
+        val (dvCur, dvPrev) = c.dvByRel(ManifestLake.relFromUri(pf.filePath.toString))
+        val cur = DvStore.read(lakeDir, dvCur, conf.value.value)
+        val prev = if (dvPrev == null) Array.empty[Long]
+                   else DvStore.read(lakeDir, dvPrev, conf.value.value)
+        i => DvStore.contains(cur, i) && !DvStore.contains(prev, i)
+      }, r => proj(joined(r, consts)))
+    } else {
+      val (inner, proj) =
+        if (c.changeType == GraftCdf.CdcLegType)
+          (cdc.createReader(partition), projection(cdcPhysical))
+        else (plain.createReader(partition), projection(plainPhysical))
       new PartitionReader[InternalRow] {
-        private var row: InternalRow = _
-        override def next(): Boolean = {
-          while (inner.next()) {
-            val r = inner.get()
-            val i = r.getLong(idxPos)
-            if (DvStore.contains(cur, i) && !DvStore.contains(prev, i)) {
-              row = proj(joined(r, consts))
-              return true
-            }
-          }
-          false
-        }
-        override def get(): InternalRow = row
+        override def next(): Boolean = inner.next()
+        override def get(): InternalRow = proj(joined(inner.get(), consts))
         override def close(): Unit = inner.close()
       }
-    }
-  }
-
-  /** Reader for a PACKED position leg: one inner single-file reader per
-    * packed file, opened sequentially, each filtered through ITS file's
-    * sidecar diff — row indexes stay file-absolute because every inner
-    * reader sees a single-file split from offset 0. */
-  private def packedDvReader(p: CdfDvPackedFilePartition)
-      : org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = {
-    val consts = new GenericInternalRow(Array[Any](
-      UTF8String.fromString(p.changeType), p.commitVersion,
-      if (p.tsMicros == null) null else p.tsMicros.longValue()))
-    val joined = new JoinedRow
-    val proj = projection(idxPhysical)
-    new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-      private var fileIdx = 0
-      private var inner: org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = _
-      private var cur: Array[Long] = _
-      private var prev: Array[Long] = _
-      private var row: InternalRow = _
-      private def openNext(): Boolean = {
-        if (fileIdx >= p.files.length) return false
-        val pf = p.files(fileIdx); fileIdx += 1
-        val (dvCur, dvPrev) = p.dvByRel(ManifestLake.relFromUri(pf.filePath.toString))
-        cur = DvStore.read(lakeDir, dvCur, conf.value.value)
-        prev = if (dvPrev == null) Array.empty[Long]
-               else DvStore.read(lakeDir, dvPrev, conf.value.value)
-        inner = withIdx.createReader(new FilePartition(p.index, Array(pf)))
-        true
-      }
-      override def next(): Boolean = {
-        var more = true
-        while (more) {
-          if (inner == null) {
-            if (!openNext()) more = false
-          } else {
-            while (inner.next()) {
-              val r = inner.get()
-              val i = r.getLong(idxPos)
-              if (DvStore.contains(cur, i) && !DvStore.contains(prev, i)) {
-                row = proj(joined(r, consts))
-                return true
-              }
-            }
-            inner.close(); inner = null
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit = if (inner != null) inner.close()
     }
   }
 }

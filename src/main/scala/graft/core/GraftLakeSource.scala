@@ -11,8 +11,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -226,10 +224,20 @@ private[core] final class GraftStreamSink(
 }
 
 private[core] object GraftLake {
+  /** The partition value a lake-relative path (or its bare `col=value`
+    * directory name) carries, unescaped — or null for the
+    * `__HIVE_DEFAULT_PARTITION__` sentinel, which presents as logical
+    * null everywhere: the DSv2 scans' partition rows, manifest
+    * aggregate pushdown, `$files` and `$partitions`. */
+  private[core] def partitionDirValue(relOrDir: String): String = {
+    val raw = unescapePartitionValue(
+      relOrDir.takeWhile(_ != '/').dropWhile(_ != '=').drop(1))
+    if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw
+  }
+
   /** Spark's own partition-value unescape (%xx sequences, written by
-    * `escapePathName` at stage time) — shared by the scan's partition
-    * row recovery and the `$files` metadata table. */
-  private[core] def unescapePartitionValue(s: String): String = {
+    * `escapePathName` at stage time). */
+  private def unescapePartitionValue(s: String): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
@@ -770,12 +778,7 @@ private[core] class GraftScanBuilder(table: GraftLakeTable,
             .map { _ =>
               table.files.groupBy(_.takeWhile(_ != '/')).toSeq
                 .map { case (pdir, fs) =>
-                  val raw = GraftLake.unescapePartitionValue(
-                    pdir.dropWhile(_ != '=').drop(1))
-                  val k: Any =
-                    if (raw == "__HIVE_DEFAULT_PARTITION__") null
-                    else org.apache.spark.unsafe.types.UTF8String.fromString(raw)
-                  (k, fs)
+                  (UTF8String.fromString(GraftLake.partitionDirValue(pdir)), fs)
                 }
             }
         case _ => None
@@ -1217,30 +1220,8 @@ private[graft] final case class GraftScan(
 
   override def toBatch: Batch = this
 
-  private def partitionValueRow(file: String): InternalRow = {
-    val part = partitionFields
-    if (part.isEmpty) InternalRow.empty
-    else {
-      val raw = GraftLake.unescapePartitionValue(
-        file.takeWhile(_ != '/').dropWhile(_ != '=').drop(1))
-      val v: Any =
-        if (raw == "__HIVE_DEFAULT_PARTITION__") null
-        else part.head.dataType match {
-          case StringType  => UTF8String.fromString(raw)
-          case LongType    => raw.toLong
-          case IntegerType => raw.toInt
-          case ShortType   => raw.toShort
-          case ByteType    => raw.toByte
-          case BooleanType => raw.toBoolean
-          case DoubleType  => raw.toDouble
-          case FloatType   => raw.toFloat
-          case DateType    => java.time.LocalDate.parse(raw).toEpochDay.toInt
-          case other => throw new IllegalStateException(
-            s"unsupported partition type $other on the SQL surface")
-        }
-      new GenericInternalRow(Array(v))
-    }
-  }
+  private def partitionRow(rel: String): InternalRow =
+    GraftRead.partitionRow(rel, partitionFields.headOption)
 
   /** Storage-partitioned joins (SPJ) — the zero-shuffle face of the
     * lake's directory layout. When the session opts in
@@ -1298,67 +1279,23 @@ private[graft] final case class GraftScan(
 
   override def planInputPartitions(): Array[InputPartition] = planFiles(effectiveFiles)
 
-  /** File list → bin-packed input splits (shared by the batch path and
-    * the micro-batch stream, which plans each CDC window's files).
+  /** File list → bin-packed input splits ([[GraftRead.toSplits]];
+    * shared by the batch path and the micro-batch stream, which plans
+    * each CDC window's files sized from that window's manifests).
     * Under SPJ ([[spjKeyed]]) the packing is per partition value —
     * splits never mix keys, and each advertises its key so Spark can
     * group them into co-partitioned tasks. */
-  private[core] def planFiles(files: Vector[String]): Array[InputPartition] = {
+  private[core] def planFiles(files: Vector[String],
+      sizes: Map[String, ManifestLake.FileSize] = table.snap.sizes)
+      : Array[InputPartition] = {
     val spark = SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException("no active SparkSession"))
-    def pfOf(rel: String): PartitionedFile = {
-      val p = java.nio.file.Paths.get(table.dir).resolve(rel)
-      // size/mtime from the manifest (zero filesystem calls — the
-      // Delta/Iceberg add.size design); statted fallback only for
-      // files a pre-size manifest committed
-      val (size, mtime) = table.snap.sizes.get(rel) match {
-        case Some(z) => (z.bytes, z.mtime)
-        case None =>
-          ManifestLake.planStatCalls.incrementAndGet()
-          (java.nio.file.Files.size(p),
-            java.nio.file.Files.getLastModifiedTime(p).toMillis)
-      }
-      new PartitionedFile(
-        partitionValueRow(rel),
-        org.apache.spark.paths.SparkPath.fromPathString(p.toString),
-        0L, size, Array.empty[String],
-        mtime, size,
-        Map.empty[String, Any])
-    }
-    def toSplits(fs: Vector[String]): Seq[FilePartition] = {
-      val whole = fs.map(pfOf)
-      // Spark's bin-packing: many small lake files → bounded task count
-      // (openCostInBytes-aware).
-      // The total handed to maxSplitBytes must charge openCostInBytes
-      // PER FILE exactly as Spark's own PartitionDirectory overload
-      // does (`_.getLen + openCostInBytes`): without it, a small-file
-      // window's bytesPerCore rounds down to openCost itself and the
-      // packing loop closes a split on EVERY file — one task per file,
-      // which the r17 q184 stage census measured as 161–242-task scan
-      // stages over KB-sized micro-batch windows.
-      val openCost = spark.sessionState.conf.filesOpenCostInBytes
-      val msb = FilePartition.maxSplitBytes(
-        spark, whole.map(_.length + openCost).sum)
-      // files ABOVE the split size break into byte-ranged splits
-      // (Spark's own splitFiles shape): the parquet reader serves each
-      // row group from the range holding its midpoint, and the
-      // temporary row-index column stays FILE-absolute under ranges,
-      // so the DV readers' sidecar positions apply unchanged — a
-      // single large MoR-deleted file is no longer one task until
-      // compaction (r17 verdict item: the packed-DV splitting bound).
-      val pfs = whole.flatMap { pf =>
-        if (pf.length <= msb) Seq(pf)
-        else (0L until pf.length by msb).map { off =>
-          new PartitionedFile(pf.partitionValues, pf.filePath, off,
-            math.min(msb, pf.length - off), Array.empty[String],
-            pf.modificationTime, pf.fileSize, Map.empty[String, Any])
-        }
-      }
-      FilePartition.getFilePartitions(spark, pfs, msb)
-    }
-    // DV'd files become SINGLE-FILE splits (never bin-packed, never
-    // row-group split): their reader must know which sidecar applies
-    // and see file-absolute row indexes from offset 0
+    def toSplits(fs: Vector[String]): Seq[FilePartition] =
+      GraftRead.toSplits(spark, fs.map(rel =>
+        GraftRead.partitionedFile(table.dir, rel, sizes, partitionRow(rel))))
+    // DV'd files bin-pack apart from clean ones: each of their splits
+    // carries one sidecar PER FILE, applied file by file by the reader
+    // ([[DvChainReader]]) so row indexes stay file-absolute
     def plan(fs: Vector[String], key: Option[InternalRow],
              nextIdx: () => Int): Seq[FilePartition] = {
       val (dvd, clean) = fs.partition(table.snap.dvs.contains)
@@ -1366,8 +1303,6 @@ private[graft] final case class GraftScan(
         case Some(k) => new KeyedFilePartition(nextIdx(), fp.files, k)
         case None    => new FilePartition(nextIdx(), fp.files)
       } }
-      // DV'd files bin-pack too (one sidecar PER FILE inside the split,
-      // applied file-by-file by the reader — see [[HasPackedDv]])
       val dvp = toSplits(dvd).map { fp =>
         val m = fp.files.map { pf =>
           val rel = ManifestLake.relFromUri(pf.filePath.toString)
@@ -1395,7 +1330,7 @@ private[graft] final case class GraftScan(
         // group by the partition directory, pack within each group, and
         // reindex across groups (split index must be scan-unique)
         files.groupBy(_.takeWhile(_ != '/')).toArray.sortBy(_._1).flatMap {
-          case (_, fs) => plan(fs, Some(partitionValueRow(fs.head)), nextIdx)
+          case (_, fs) => plan(fs, Some(partitionRow(fs.head)), nextIdx)
         }
       case None => plan(files, None, nextIdx).toArray
     }
@@ -1435,51 +1370,10 @@ private[graft] final case class GraftScan(
     // — `pushed` already carries physical names
     val dataCols = dataSchema.fieldNames.toSet
     val dataFilters = pushed.filter(_.references.forall(dataCols.contains))
-    // The reader factory expects the conf ParquetScan prepares: the
-    // read-support class + requested/row schemas + the type-mapping
-    // flags. Same entries, same values — the factory's vectorized and
-    // row paths both read them.
-    val sqlConf = spark.sessionState.conf
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
-    import org.apache.spark.sql.internal.SQLConf
-    def mkFactory(requested: StructType, filters: Array[Filter])
-        : ParquetPartitionReaderFactory = {
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      hadoopConf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-        classOf[ParquetReadSupport].getName)
-      hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
-      hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, requested.json)
-      hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
-      hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
-        sqlConf.nestedSchemaPruningEnabled)
-      hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
-      ParquetWriteSupport.setSchema(requested, hadoopConf)
-      hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
-        sqlConf.isParquetBinaryAsString)
-      hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
-        sqlConf.isParquetINT96AsTimestamp)
-      hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
-        sqlConf.getConf(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED))
-      hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
-        sqlConf.getConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG))
-      hadoopConf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key,
-        sqlConf.getConf(SQLConf.PARQUET_FIELD_ID_READ_ENABLED))
-      hadoopConf.setBoolean(SQLConf.IGNORE_MISSING_PARQUET_FIELD_ID.key,
-        sqlConf.getConf(SQLConf.IGNORE_MISSING_PARQUET_FIELD_ID))
-      ParquetPartitionReaderFactory(
-        spark.sessionState.conf,
-        spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(hadoopConf)),
-        dataSchema,
-        requested,
-        StructType(part),
-        filters,
-        None,
-        new ParquetOptions(Map.empty[String, String],
-          spark.sessionState.conf))
-    }
+    def mkFactory(requested: StructType, filters: Array[Filter]) =
+      GraftRead.parquetFactory(spark, dataSchema, requested, StructType(part), filters)
     val parquetFactory = mkFactory(readData, dataFilters)
-    // Deletion vectors: DV'd files (single-file splits — see
+    // Deletion vectors: DV'd files (packed DV splits — see
     // [[planFiles]]) read through a SECOND factory whose requested
     // schema appends Spark's temporary row-index column (the parquet
     // readers generate file-absolute positions, page/row-group
@@ -1494,18 +1388,10 @@ private[graft] final case class GraftScan(
     val base: PartitionReaderFactory =
       if (!effectiveFiles.exists(table.snap.dvs.contains)) parquetFactory
       else {
-        import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-        // nullable: the column is absent from the FILE (the reader
-        // fills it) — a required-but-missing column fails the
-        // vectorized reader's checkColumn before row-index generation
-        // even engages
-        val idxField = StructField(
-          ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true)
-        val dvInner = mkFactory(StructType(readData.fields :+ idxField), Array.empty)
-        new DvFilteringReaderFactory(parquetFactory, dvInner, table.dir,
-          spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf())),
-          StructType((readData.fields :+ idxField) ++ part), readData.length)
+        val withIdx = StructType(readData.fields :+ GraftRead.RowIndexField)
+        new DvFilteringReaderFactory(parquetFactory, mkFactory(withIdx, Array.empty),
+          table.dir, GraftRead.sidecarConf(spark),
+          StructType(withIdx.fields ++ part), readData.length)
       }
     // the factory emits readData ++ part; permute only when the
     // required order differs (a lake whose partition column is not
@@ -1572,57 +1458,20 @@ private[core] final class DvFilteringReaderFactory(
   // internally; only batch-level transfer is lost, until compaction)
   override def supportColumnarReads(partition: InputPartition): Boolean = false
 
-  private def dvProjection(): org.apache.spark.sql.catalyst.expressions.UnsafeProjection = {
-    val out = withIdx.zipWithIndex.filter(_._2 != idxPos)
-    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-      out.map { case (f, i) =>
-        org.apache.spark.sql.catalyst.expressions.BoundReference(
-          i, f.dataType, f.nullable)
-      })
-  }
-
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case p: HasPackedDv =>
-        // packed DV split: one inner single-file reader per file,
-        // opened sequentially, each filtered through ITS sidecar —
-        // row indexes stay file-absolute
-        val fp = partition.asInstanceOf[FilePartition]
-        val proj = dvProjection()
-        new PartitionReader[InternalRow] {
-          private var fileIdx = 0
-          private var inner: PartitionReader[InternalRow] = _
-          private var positions: Array[Long] = _
-          private var cur: InternalRow = _
-          private def openNext(): Boolean = {
-            if (fileIdx >= fp.files.length) return false
-            val pf = fp.files(fileIdx); fileIdx += 1
-            val rel = ManifestLake.relFromUri(pf.filePath.toString)
-            positions = DvStore.read(lakeDir, p.dvByRel(rel), conf.value.value)
-            inner = dvInner.createReader(new FilePartition(fp.index, Array(pf)))
-            true
-          }
-          override def next(): Boolean = {
-            var more = true
-            while (more) {
-              if (inner == null) {
-                if (!openNext()) more = false
-              } else {
-                while (inner.next()) {
-                  val r = inner.get()
-                  if (!DvStore.contains(positions, r.getLong(idxPos))) {
-                    cur = proj(r)
-                    return true
-                  }
-                }
-                inner.close(); inner = null
-              }
-            }
-            false
-          }
-          override def get(): InternalRow = cur
-          override def close(): Unit = if (inner != null) inner.close()
-        }
+        // keep rows the file's sidecar does not name; strip the index
+        val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
+          withIdx.zipWithIndex.filter(_._2 != idxPos).map { case (f, i) =>
+            org.apache.spark.sql.catalyst.expressions.BoundReference(
+              i, f.dataType, f.nullable)
+          })
+        new DvChainReader(p.asInstanceOf[FilePartition], dvInner, idxPos, pf => {
+          val positions = DvStore.read(lakeDir,
+            p.dvByRel(ManifestLake.relFromUri(pf.filePath.toString)), conf.value.value)
+          i => !DvStore.contains(positions, i)
+        }, proj)
       case _ => clean.createReader(partition)
     }
 }
@@ -1784,11 +1633,14 @@ private[core] final class GraftMicroBatchStream(scan: GraftScan)
             "reprocess from a snapshot or set skipChangeCommits=true to skip them")
       }
       val files = ManifestLake.changedFiles(dir, s0, e0)
-      val snapEnd = ManifestLake.snapshotAt(dir, e0).getOrElse(
-        throw new IllegalStateException(s"manifest v$e0 of $dir is missing"))
+      val window = (s0 + 1 to e0).map(v => ManifestLake.snapshotAt(dir, v).getOrElse(
+        throw new IllegalStateException(s"manifest v$v of $dir is missing")))
       val kept = files.filter(f => scan.pushed.forall(
-        GraftPrune.survives(snapEnd, scan.table.partitionCol, f, _)))
-      scan.planFiles(kept)
+        GraftPrune.survives(window.last, scan.table.partitionCol, f, _)))
+      // size the window's files from the window's own manifests — the
+      // scan's snapshot is the one bound at load(), which knows no file
+      // committed since (each would be statted on every micro-batch)
+      scan.planFiles(kept, window.iterator.flatMap(_.sizes).toMap)
     }
   }
 

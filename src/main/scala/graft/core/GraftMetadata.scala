@@ -188,12 +188,7 @@ private[core] object GraftMetadata {
         throw new IllegalStateException(s"no committed manifest in $dir"))
     }
     snap.files.iterator.flatMap { f =>
-      val raw = GraftLake.unescapePartitionValue(
-        f.takeWhile(_ != '/').dropWhile(_ != '=').drop(1))
-      // the null-partition sentinel directory presents as logical null,
-      // the same mapping the data scan's partition row recovery applies
-      val partition: Any =
-        if (raw == "__HIVE_DEFAULT_PARTITION__") null else utf8(raw)
+      val partition = utf8(GraftLake.partitionDirValue(f))
       val bloomCols = snap.blooms.getOrElse(f, Vector.empty).map(_.col).toSet
       val stats = snap.stats.getOrElse(f, Vector.empty)
       val nRows: Any = snap.rows.get(f).map(Long.box).orNull
@@ -218,10 +213,7 @@ private[core] object GraftMetadata {
     }
     snap.files.groupBy(_.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .map { case (pdir, fs) =>
-        val raw = GraftLake.unescapePartitionValue(
-          pdir.dropWhile(_ != '=').drop(1))
-        val partition: Any =
-          if (raw == "__HIVE_DEFAULT_PARTITION__") null else utf8(raw)
+        val partition = utf8(GraftLake.partitionDirValue(pdir))
         // NET of deletion vectors — what a read of the partition emits
         val rows: Any =
           if (fs.forall(snap.rows.contains)) Long.box(fs.flatMap(snap.netRows).sum)

@@ -237,7 +237,7 @@ private[core] final class GraftDataWriter(
       if (row.isNullAt(pi)) "__HIVE_DEFAULT_PARTITION__"
       else {
         // render the EXTERNAL form, matching what Spark's partitionBy
-        // writes and what GraftScan.partitionValueRow parses back —
+        // writes and what GraftRead.partitionRow parses back —
         // DateType's internal Int (epoch days) must become the ISO
         // date, or the rewrite would fork 'd=19738/' beside
         // 'd=2024-01-15/' and break every later partition parse

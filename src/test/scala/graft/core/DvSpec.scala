@@ -563,10 +563,22 @@ class DvSpec extends SparkSpec {
     assert(nFiles >= 36, s"fixture did not fragment: $nFiles files")
     assert(nParts * 3 <= nFiles,
       s"DV'd scan did not pack: $nParts partitions over $nFiles files")
-    // the CDF position leg packs the same way and stays exact
+    // the CDF position leg packs the same way and stays exact — on the
+    // Scala feed and on the DSv2 feed, whose splits come from the same
+    // planner as the scan's
     val feed = ManifestLake.readChangeFeed(spark, dir, 1L, 2L)
-    assert(feed.count() == 128L)
     assert(feed.select($"_change_type").distinct().head().getString(0) == "delete")
+    val dsv2Feed = spark.read.format("graft").option("path", dir)
+      .option("readChangeFeed", "true")
+      .option("startingVersion", "1").option("endingVersion", "2").load()
+    for ((face, f) <- Seq("scala" -> feed, "dsv2" -> dsv2Feed)) {
+      assert(f.count() == 128L, face)
+      assert(f.agg(org.apache.spark.sql.functions.sum($"doc_id")).head().getLong(0) ==
+        (0L until 640L).filter(_ % 5 == 0).sum, face)
+    }
+    val feedParts = dsv2Feed.rdd.getNumPartitions
+    assert(feedParts * 3 <= nFiles,
+      s"DSv2 position leg did not pack: $feedParts partitions over $nFiles files")
   }
 
   test("ranged DV splits: one file above maxSplitBytes plans multiple " +
@@ -599,11 +611,21 @@ class DvSpec extends SparkSpec {
       assert(df.count() == (0L until 20000L).count(_ % 7 != 0))
       assert(df.agg(org.apache.spark.sql.functions.sum($"doc_id")).head()
         .getLong(0) == (0L until 20000L).filter(_ % 7 != 0).sum)
-      // the CDF position leg range-splits with the same absolute math
+      // the CDF position leg range-splits with the same absolute math,
+      // on the Scala feed and on the DSv2 feed
       val feed = ManifestLake.readChangeFeed(spark, dir, 1L, 2L)
-      assert(feed.count() == (0L until 20000L).count(_ % 7 == 0))
-      assert(feed.select(org.apache.spark.sql.functions.sum($"doc_id")).head()
-        .getLong(0) == (0L until 20000L).filter(_ % 7 == 0).sum)
+      val dsv2Feed = spark.read.format("graft").option("path", dir)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", "1").option("endingVersion", "2").load()
+      for ((face, f) <- Seq("scala" -> feed, "dsv2" -> dsv2Feed)) {
+        assert(f.count() == (0L until 20000L).count(_ % 7 == 0), face)
+        assert(f.select(org.apache.spark.sql.functions.sum($"doc_id")).head()
+          .getLong(0) == (0L until 20000L).filter(_ % 7 == 0).sum, face)
+      }
+      val feedParts = dsv2Feed.rdd.getNumPartitions
+      assert(feedParts >= 3,
+        s"a $bytes-byte DV'd file should range-split the DSv2 position leg at 64k, " +
+          s"got $feedParts task(s)")
     } finally { spark.conf.set(mpbK, mpb0); spark.conf.set(ocK, oc0) }
   }
 

@@ -1157,10 +1157,16 @@ class LayoutSpec extends SparkSpec {
       def ids() = spark.table("graft_src_sink")
         .select($"doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(ids() == (0L until 50L), "backfill = the whole append history")
-      // a new append commit becomes the next micro-batch
+      // a new append commit becomes the next micro-batch, planned from
+      // the window's own manifest: the file committed after load() is
+      // sized without a filesystem stat (the stream thread may plan it
+      // as soon as the commit lands, so the census starts before it)
+      val stats0 = ManifestLake.planStatCalls.get()
       ManifestLake.append(spark, dir, batch(50, 80), "source", statsCols = Seq("doc_id"))
       q.processAllAvailable()
       assert(ids() == (0L until 80L))
+      assert(ManifestLake.planStatCalls.get() == stats0,
+        s"micro-batch planning statted ${ManifestLake.planStatCalls.get() - stats0} file(s)")
       // compaction and deletion commits are INVISIBLE to the stream
       ManifestLake.compact(spark, dir, "source", targetRecordsPerFile = 1000L)
       q.processAllAvailable()
