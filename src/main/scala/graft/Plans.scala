@@ -104,8 +104,8 @@ object Plans {
     "q35_island_time_ranges" ->
       """The flagship islands pipeline: narrow smoothing UDF (measured 100×
         |faster than the HOF form that re-evaluates the convolution per
-        |element), gaps-and-islands windows partitioned by vec_id (one
-        |shuffle on the natural key), then an interval-overlap join that is
+        |element), islands found per row by the find_islands generator (no
+        |explode, window or shuffle), then an interval-overlap join that is
         |equi on vec_id + range predicate — never a blind theta join.""".stripMargin,
     "q47_lm_broadcast_score" ->
       """W2+W5: assembly is one shuffle of text bytes keyed by source

@@ -381,27 +381,38 @@ private[core] final class CdfReaderFactory(
   * with row-level deletes instead of just an error. */
 private[core] final class GraftCdfMicroBatchStream(scan: GraftCdfScan)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
+    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
   private def dir = scan.table.dir
   private final case class V(v: Long) extends Offset {
     override def json: String = v.toString
   }
+
+  /** `Trigger.AvailableNow`: drain the changes committed as of query
+    * start in `maxVersionsPerTrigger`-bounded windows, then stop — the
+    * target version pins here once, as in [[GraftMicroBatchStream]]. */
+  @volatile private var availableNowCap: Option[Long] = None
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowCap =
+      Some(ManifestLake.latestSnapshot(dir).map(_.version).getOrElse(0L))
   override def initialOffset(): Offset = scan.streamStartingVersion match {
     case None => V(0L)
     case Some(StreamStart.Latest) =>
       V(ManifestLake.latestSnapshot(dir).map(_.version).getOrElse(0L))
     case Some(StreamStart.At(v)) => V(v - 1)
   }
-  override def latestOffset(): Offset =
-    V(ManifestLake.latestSnapshot(dir).map(_.version).getOrElse(0L))
+  override def latestOffset(): Offset = {
+    val actual = ManifestLake.latestSnapshot(dir).map(_.version).getOrElse(0L)
+    V(availableNowCap.fold(actual)(math.min(actual, _)))
+  }
   override def deserializeOffset(json: String): Offset = V(json.trim.toLong)
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
   override def reportLatestOffset(): Offset = latestOffset()
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s0 = start.asInstanceOf[V].v
-    val latest = latestOffset().asInstanceOf[V].v
+    val latest = math.max(s0, latestOffset().asInstanceOf[V].v)
     scan.maxVersionsPerTrigger match {
       case None       => V(latest)
       case Some(maxV) => V(math.min(latest, s0 + maxV))

@@ -477,9 +477,30 @@ object ManifestLake {
     }
     /** The two independent 64-bit streams double hashing derives all k
       * probe positions from. */
-    def pair(v: Any): (Long, Long) = {
-      val h = canonical(v)
+    def pair(v: Any): (Long, Long) = pairOf(canonical(v))
+    private def pairOf(h: Long): (Long, Long) =
       (splitmix64(h ^ 0xA24BAED4963EE407L), splitmix64(h ^ 0x9FB21C651E98DF25L) | 1L)
+    /** Set the k probe bits of the value whose [[canonical]] hash is
+      * `h` — the one bit-setting routine of the write-time build
+      * ([[StagedFileTracker]]) and the scan build ([[buildBlooms]]). */
+    def setBits(bits: Array[Long], k: Int, h: Long): Unit = {
+      val (h1, h2) = pairOf(h)
+      val m = bits.length.toLong * 64L
+      var i = 0
+      while (i < k) {
+        val pos = java.lang.Long.remainderUnsigned(h1 + i.toLong * h2, m).toInt
+        bits(pos >>> 6) |= 1L << (pos & 63)
+        i += 1
+      }
+    }
+    /** Filter size in 64-bit words for a file of `rows` rows:
+      * [[BloomBitsPerKey]] bits per row rounded up to a power of two
+      * (at least one word, at most 2^30 bits). */
+    def words(rows: Long): Int = {
+      val wanted = math.max(64L, rows * BloomBitsPerKey)
+      var bits = 64L
+      while (bits < wanted && bits < (1L << 30)) bits <<= 1
+      (bits / 64).toInt
     }
   }
 
@@ -1096,9 +1117,6 @@ object ManifestLake {
     }
   }
 
-  /** Stage `df` (partitioned by `partitionCol`) into the lake's
-    * partition directories under UUID names and return the relative
-    * paths — files exist on disk but are NOT yet in any manifest. */
   /** The synthetic stage-only directory column a bucketed write
     * partitions by (stripped before files land — bucket membership
     * lives in the MANIFEST, not the directory layout, so every
@@ -1115,11 +1133,34 @@ object ManifestLake {
       org.apache.spark.sql.functions.hash(org.apache.spark.sql.functions.col(col)),
       org.apache.spark.sql.functions.lit(n))
 
+  /** A staged write: its files (lake-relative), their bucket ids, and
+    * the per-file metadata their manifest lines carry — footer min/max/
+    * null stats of the tracked columns, footer row counts, and bloom
+    * filters built during the write. */
+  private final case class Staged(files: Vector[String], buckets: Map[String, Int],
+                                  stats: Map[String, Vector[FileStats]],
+                                  rows: Map[String, Long],
+                                  blooms: Map[String, Vector[FileBloom]])
+
+  /** Test seam over the row counts the staging job tracked per file,
+    * before they are reconciled with the footers. Production value is
+    * the identity; specs that swap it in must restore it in a finally. */
+  @volatile private[core] var trackedRowsSeam: Map[String, Long] => Map[String, Long] = identity
+
+  /** Write `df` into fresh partition directories under UUID names, in
+    * ONE Spark job whose [[StagedFileTracker]] counts each file's rows
+    * and builds its `bloomCols` filters as the rows are written; then
+    * one bounded footer pass ([[footerMetaAll]]) reads the `statsCols`
+    * stats and row counts. The files exist on disk but are NOT yet in
+    * any manifest. Tracked and footer row counts must agree per file —
+    * a file the tracker missed or miscounted would commit a filter that
+    * silently prunes rows that exist — else the staged files are
+    * deleted and the call throws. */
   private def stageFiles(s: SparkSession, root: Path, df: DataFrame,
                          partitionCol: String, maxRecordsPerFile: Long,
                          writeOptions: Map[String, String],
-                         bucket: Option[(String, Int)] = None)
-      : (Vector[String], Map[String, Int]) = {
+                         bucket: Option[(String, Int)],
+                         statsCols: Seq[String], bloomCols: Seq[String]): Staged = {
     requirePartitionColEncodable(partitionCol)
     val stage = root.resolve(s".stage_${UUID.randomUUID()}")
     val (toWrite, dirCols) = bucket match {
@@ -1139,13 +1180,15 @@ object ManifestLake {
           Seq(partitionCol, BucketDirCol))
       case None => (df, Seq(partitionCol))
     }
-    toWrite.write.partitionBy(dirCols: _*)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .options(writeOptions)
-      .parquet(stage.toString)
+    val tracker = new StagedFileTracker(toWrite.schema, dirCols, bloomCols)
+    org.apache.spark.sql.graftbridge.GraftSqlBridge.writeParquet(s, toWrite,
+      stage.toString, dirCols,
+      Map("maxRecordsPerFile" -> maxRecordsPerFile.toString) ++ writeOptions,
+      Seq(tracker))
     val moved = Vector.newBuilder[String]
+    val keyOf = Map.newBuilder[String, String]
     val bucketOf = Map.newBuilder[String, Int]
-    def moveLeaves(pdir: Path, pname: String, b: Option[Int]): Unit = {
+    def moveLeaves(pdir: Path, pname: String, key: String, b: Option[Int]): Unit = {
       val dest = root.resolve(pname)
       Files.createDirectories(dest)
       val fs = Files.list(pdir)
@@ -1155,20 +1198,44 @@ object ManifestLake {
           val unique = s"${UUID.randomUUID()}-$fname"
           Files.move(f, dest.resolve(unique))
           moved += s"$pname/$unique"
+          keyOf += s"$pname/$unique" -> s"$key/$fname"
           b.foreach(id => bucketOf += s"$pname/$unique" -> id)
         } else if (Files.isDirectory(f) && fname.startsWith(s"$BucketDirCol=")) {
           // bucketed layout: one more stage-only dir level, stripped
           // here — the id rides the manifest instead
-          moveLeaves(f, pname, fname.stripPrefix(s"$BucketDirCol=").toIntOption)
+          moveLeaves(f, pname, s"$key/$fname",
+            fname.stripPrefix(s"$BucketDirCol=").toIntOption)
         }
       } finally fs.close()
     }
     val parts = Files.list(stage)
     try parts.iterator().asScala.filter(Files.isDirectory(_)).foreach { pdir =>
-      moveLeaves(pdir, pdir.getFileName.toString, None)
+      val pname = pdir.getFileName.toString
+      moveLeaves(pdir, pname, pname, None)
     } finally parts.close()
     deleteTree(stage)
-    (moved.result(), bucketOf.result())
+    val files = moved.result()
+    val keys = keyOf.result()
+    val (stats, rows) = footerMetaAll(s, root, files, statsCols)
+    val tracked = tracker.files
+    val trackedRows = trackedRowsSeam(files.flatMap(f =>
+      tracked.get(keys(f)).map(t => f -> t.rows)).toMap)
+    val unreconciled = files.filter(f => !trackedRows.get(f).contains(rows(f)))
+    if (unreconciled.nonEmpty) {
+      files.foreach(f => Files.deleteIfExists(root.resolve(f)))
+      throw new IllegalStateException(
+        s"staging could not reconcile the rows its write job tracked with " +
+          s"the footers of $unreconciled; refusing to commit skipping " +
+          "metadata that disagrees with the files")
+    }
+    val blooms =
+      if (bloomCols.isEmpty) Map.empty[String, Vector[FileBloom]]
+      else files.map { f =>
+        f -> bloomCols.toVector.zip(tracked(keys(f)).bits).map { case (c, bits) =>
+          FileBloom(c, BloomK, bits)
+        }
+      }.toMap
+    Staged(files, bucketOf.result(), stats, rows, blooms)
   }
 
   /** Stage a CHANGE frame (lake columns + a stored [[CdfTypeCol]]) as
@@ -1468,8 +1535,8 @@ object ManifestLake {
 
   /** One bounded-parallel footer pass over `files`: per-file stats of
     * `cols` (possibly empty) and per-file row counts — the single
-    * metadata read every commit path derives its skipping index AND
-    * `rows:` segments from. */
+    * metadata read every commit path derives its min/max/null stats
+    * AND `rows:` segments from. */
   private def footerMetaAll(s: SparkSession, root: Path, files: Seq[String],
                             cols: Seq[String])
       : (Map[String, Vector[FileStats]], Map[String, Long]) = {
@@ -1479,17 +1546,21 @@ object ManifestLake {
   }
 
   /** One distributed pass building a per-file Bloom filter of `cols`
-    * over exactly `files` (the NEW files of a commit — never the
-    * lake): footer row counts size each filter (power-of-two word
-    * count at [[BloomBitsPerKey]]), then a single narrow column scan
+    * over exactly `files` — files that ALREADY exist (a compaction's
+    * rewrites, a SQL row-level write's files); staged writes build
+    * theirs during the write ([[stageFiles]]). Footer row counts size
+    * each filter ([[BloomHash.words]]), then a single narrow column scan
     * accumulates per-partition partial bit arrays that OR-merge on the
-    * driver. Cost ∝ new-file bytes of the indexed columns; collected
+    * driver. Cost ∝ the files' bytes of the indexed columns; collected
     * partials are (#files × filter size), metadata-shaped. A file
     * contributing no rows keeps an all-zero filter — "contains
-    * nothing" is the correct answer for it. */
-  private def buildBlooms(s: SparkSession, dir: String, files: Vector[String],
-                          cols: Seq[String],
-                          knownRows: Map[String, Long] = Map.empty)
+    * nothing" is the correct answer for it. `schema` (the committed
+    * schema) types the partition column when it is bloom-indexed, so
+    * its directory values hash as the written type, not as inferred. */
+  private[core] def buildBlooms(s: SparkSession, dir: String, files: Vector[String],
+                                cols: Seq[String],
+                                knownRows: Map[String, Long] = Map.empty,
+                                schema: Option[org.apache.spark.sql.types.StructType] = None)
       : Map[String, Vector[FileBloom]] = {
     if (files.isEmpty || cols.isEmpty) return Map.empty
     val root = Paths.get(dir)
@@ -1498,26 +1569,46 @@ object ManifestLake {
     val footerRows: Map[String, Long] =
       if (files.forall(knownRows.contains)) knownRows.view.filterKeys(files.toSet).toMap
       else parMapMeta(files)(f => f -> rowCount(s, root.resolve(f))).toMap
-    val words: Map[String, Int] = footerRows.map { case (f, n) =>
-      val wanted = math.max(64L, n * BloomBitsPerKey)
-      var bits = 64L
-      while (bits < wanted && bits < (1L << 30)) bits <<= 1
-      f -> (bits / 64).toInt
-    }
+    val (blooms, rowsSeen) = bloomScan(s, dir, files, cols, footerRows, schema)
+    // The file key is derived from input_file_name's URI form, which
+    // can diverge from the staged name on exotic partition values
+    // (URL-encoding); an unreconciled file would otherwise commit an
+    // all-zero bloom that silently prunes every probe for rows that
+    // exist. Loud beats silent: mismatch throws.
+    val unreconciled = files.filter(f =>
+      rowsSeen.getOrElse(f, 0L) != footerRows(f))
+    if (unreconciled.nonEmpty)
+      throw new IllegalStateException(
+        s"bloom build could not reconcile scanned rows with footers for " +
+          s"$unreconciled — input_file_name/staged-name mismatch (partition " +
+          "value needing URL-escaping?); refusing to commit a silent " +
+          "all-zero filter")
+    blooms
+  }
+
+  /** [[buildBlooms]]' scan: per-file filters of `cols`, sized from
+    * `footerRows`, and the rows the scan saw per file. */
+  private[core] def bloomScan(s: SparkSession, dir: String, files: Vector[String],
+                              cols: Seq[String], footerRows: Map[String, Long],
+                              schema: Option[org.apache.spark.sql.types.StructType])
+      : (Map[String, Vector[FileBloom]], Map[String, Long]) = {
+    val root = Paths.get(dir)
+    val words: Map[String, Int] = footerRows.map { case (f, n) => f -> BloomHash.words(n) }
     val colsV = cols.toVector
     val k = BloomK
     // Staged-file scan WITHOUT a listing job (guide §6): every caller
-    // hands files this engine just wrote, so their exact Spark schema
-    // sits in the first footer and their statuses come from one
-    // bounded writer-side stat pass — the same manifest-fed FileIndex
-    // lake reads use. `spark.read.parquet(paths)` here meant a fresh
+    // hands files this engine wrote, so their exact Spark schema sits
+    // in the first footer and their statuses come from one bounded
+    // writer-side stat pass — the same manifest-fed FileIndex lake
+    // reads use. `spark.read.parquet(paths)` here meant a fresh
     // InMemoryFileIndex per bloom-indexed commit: a DISTRIBUTED
     // "Listing leaf files" job past 32 staged paths plus a footer-
     // inference job, per commit, for paths the commit already names.
-    // The partition/bucket dir columns are not in the file data; a
-    // bloom col outside the written schema (e.g. the partition column
-    // itself) keeps the legacy basePath read that restores it, as do
-    // non-Spark footers and layouts off the one-level `col=value` shape.
+    // The partition column is not in the file data: it is restored
+    // from the directory names, typed by the committed schema. A bloom
+    // col outside the written schema and the partition column keeps
+    // the legacy basePath read, as do non-Spark footers and layouts
+    // off the one-level `col=value` shape.
     def resolvable(sc: org.apache.spark.sql.types.StructType,
                    name: String): Boolean =
       sc.fieldNames.contains(name) || {
@@ -1537,22 +1628,27 @@ object ManifestLake {
       val i = f.indexOf('/')
       i > 0 && f.indexOf('/', i + 1) < 0 && f.take(i).contains('=')
     }
+    val partField = files.headOption.map(_.takeWhile(_ != '='))
+      .filter(p => oneLevel && colsV.contains(p))
+      .flatMap(p => schema.flatMap(_.fields.find(_.name == p)))
     val raw: DataFrame = {
       import org.apache.spark.sql.graftbridge.GraftSqlBridge
       val planned =
         if (!oneLevel) None
         else writtenSparkSchema(s, root.resolve(files.head))
-          .filter(sc => colsV.forall(resolvable(sc, _)))
+          .filter(sc => colsV.forall(c => resolvable(sc, c) || partField.exists(_.name == c)))
           .map { sc =>
             val statuses = parMapMeta(files) { f =>
               val p = root.resolve(f)
               val attrs = Files.readAttributes(p,
                 classOf[java.nio.file.attribute.BasicFileAttributes])
-              GraftSqlBridge.LakeFile(p.toAbsolutePath.toString,
-                attrs.size, attrs.lastModifiedTime.toMillis)
+              (f.takeWhile(_ != '/').dropWhile(_ != '=').drop(1),
+                GraftSqlBridge.LakeFile(p.toAbsolutePath.toString,
+                  attrs.size, attrs.lastModifiedTime.toMillis))
             }
-            GraftSqlBridge.manifestParquetFrame(s, dir, None, sc,
-              Seq(("", statuses)))
+            GraftSqlBridge.manifestParquetFrame(s, dir, partField, sc,
+              if (partField.isEmpty) Seq(("", statuses.map(_._2)))
+              else statuses.groupBy(_._1).toSeq.map { case (v, fs) => (v, fs.map(_._2)) })
           }
       planned.getOrElse(
         s.read.option("basePath", dir).parquet(files.map(f => s"$dir/$f"): _*))
@@ -1565,13 +1661,7 @@ object ManifestLake {
       .select(input_file_name().as("_bloom_file") +: colsV.map(leafCol): _*)
     val bWords = s.sparkContext.broadcast(words)
     import s.implicits._
-    // j == -1 rows carry the per-file ROW COUNT the scan actually saw —
-    // reconciled against the footer counts below. The file key is
-    // derived from input_file_name's URI form, which can diverge from
-    // the staged name on exotic partition values (URL-encoding); an
-    // unreconciled file would otherwise commit an all-zero bloom that
-    // silently prunes every probe for rows that exist. Loud beats
-    // silent: mismatch throws.
+    // j == -1 rows carry the per-file ROW COUNT the scan actually saw
     val partials = df.mapPartitions { it =>
       def rel(abs: String): String = ManifestLake.relFromUri(abs)
       val acc = scala.collection.mutable.HashMap.empty[(String, Int), Array[Long]]
@@ -1584,17 +1674,9 @@ object ManifestLake {
           var j = 0
           while (j < colsV.length) {
             val v = r.get(1 + j)
-            if (v != null) {
-              val bits = acc.getOrElseUpdate((f, j), new Array[Long](w))
-              val (h1, h2) = BloomHash.pair(v)
-              val m = w.toLong * 64L
-              var i = 0
-              while (i < k) {
-                val pos = java.lang.Long.remainderUnsigned(h1 + i.toLong * h2, m).toInt
-                bits(pos >>> 6) |= 1L << (pos & 63)
-                i += 1
-              }
-            }
+            if (v != null)
+              BloomHash.setBits(acc.getOrElseUpdate((f, j), new Array[Long](w)), k,
+                BloomHash.canonical(v))
             j += 1
           }
         }
@@ -1614,19 +1696,11 @@ object ManifestLake {
           case None => merged((f, j)) = bits.clone()
         }
     }
-    val unreconciled = files.filter(f =>
-      rowsSeen.getOrElse(f, 0L) != footerRows(f))
-    if (unreconciled.nonEmpty)
-      throw new IllegalStateException(
-        s"bloom build could not reconcile scanned rows with footers for " +
-          s"$unreconciled — input_file_name/staged-name mismatch (partition " +
-          "value needing URL-escaping?); refusing to commit a silent " +
-          "all-zero filter")
-    files.map { f =>
+    (files.map { f =>
       f -> colsV.indices.toVector.map { j =>
         FileBloom(colsV(j), k, merged.getOrElse((f, j), new Array[Long](words(f))))
       }
-    }.toMap
+    }.toMap, rowsSeen.toMap)
   }
 
   /** Append `df` to the lake (creating it on first call): stage, then
@@ -1637,8 +1711,8 @@ object ManifestLake {
     * [[readWhere]] file skipping (O(#new files) driver-side footer
     * reads — metadata, not data). With `bloomCols` set, each staged
     * file additionally commits a [[FileBloom]] point-lookup filter of
-    * those columns (one extra narrow scan of the NEW files only,
-    * [[buildBlooms]]) enabling [[readPoint]] skipping on keys min/max
+    * those columns (built by the staging job as it writes,
+    * [[stageFiles]]) enabling [[readPoint]] skipping on keys min/max
     * cannot prune. */
   /** DDL-first lake creation (`CREATE TABLE graft.`/dir`` (...)
     * PARTITIONED BY (col) TBLPROPERTIES('statsCols'='...', ...)`):
@@ -1883,7 +1957,8 @@ object ManifestLake {
     require(!snap.props.contains(PropConstraintPrefix + name),
       s"constraint '$name' already exists on $dir — drop it first")
     val parsed = expr(checkExpr)
-    snap.schema.foreach { sc =>
+    // the expression names LOGICAL columns (renames applied)
+    snap.logicalSchema.foreach { sc =>
       val empty = s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), sc)
       val det =
@@ -2869,21 +2944,19 @@ object ManifestLake {
     val effStats = (statsCols ++ pre.toSeq.flatMap(_.declaredStatsCols)).distinct
     val effBlooms = (bloomCols ++ pre.toSeq.flatMap(_.declaredBloomCols)).distinct
     val bucket = effectiveBucket(dir, pre, bucketBy)
-    val (staged, stagedBuckets) = stageFiles(s, root,
+    val st = stageFiles(s, root,
       withCheckConstraints(df, pre.map(_.constraints).getOrElse(Nil),
         pre.map(_.renames).getOrElse(Map.empty)),
-      partitionCol, maxRecordsPerFile, writeOptions, bucket)
-    val (stagedStats, stagedRows) = footerMetaAll(s, root, staged, effStats)
-    val stagedBlooms = buildBlooms(s, dir, staged, effBlooms, stagedRows)
+      partitionCol, maxRecordsPerFile, writeOptions, bucket, effStats, effBlooms)
     commitLoop(root) { latest =>
-      Some(Ledger(latest.map(_.files).getOrElse(Vector.empty) ++ staged,
+      Some(Ledger(latest.map(_.files).getOrElse(Vector.empty) ++ st.files,
         latest.map(_.txns).getOrElse(Map.empty),
-        latest.map(_.stats).getOrElse(Map.empty) ++ stagedStats, "append",
+        latest.map(_.stats).getOrElse(Map.empty) ++ st.stats, "append",
         Some(evolveSchema(latest.flatMap(_.schema), df.schema)),
-        latest.map(_.blooms).getOrElse(Map.empty) ++ stagedBlooms,
-        latest.map(_.rows).getOrElse(Map.empty) ++ stagedRows,
+        latest.map(_.blooms).getOrElse(Map.empty) ++ st.blooms,
+        latest.map(_.rows).getOrElse(Map.empty) ++ st.rows,
         propsWithBucket(latest, bucket),
-        buckets = stagedBuckets))
+        buckets = st.buckets))
     }.get
   }
 
@@ -2963,30 +3036,28 @@ object ManifestLake {
     }
     val effStats = (statsCols ++ already.toSeq.flatMap(_.declaredStatsCols)).distinct
     val effBlooms = (bloomCols ++ already.toSeq.flatMap(_.declaredBloomCols)).distinct
-    val (staged, stagedBuckets) = stageFiles(s, root,
+    // stats and blooms built OUTSIDE the commit loop (with the staging
+    // job, a CAS retry must not re-run it); a duplicate batch detected
+    // inside the loop discards them with the staged files — streamed-in
+    // files carry the SAME skipping metadata as batch appends, so a
+    // lake fed by a stream never erodes its index
+    val st = stageFiles(s, root,
       withCheckConstraints(df, already.map(_.constraints).getOrElse(Nil),
         already.map(_.renames).getOrElse(Map.empty)),
       partitionCol, maxRecordsPerFile, Map.empty,
-      already.flatMap(_.declaredBucket))
-    // stats and blooms built OUTSIDE the commit loop (one scan of the
-    // staged files, a CAS retry must not re-run it); a duplicate batch
-    // detected inside the loop discards them with the staged files —
-    // streamed-in files carry the SAME skipping metadata as batch
-    // appends, so a lake fed by a stream never erodes its index
-    val (stagedStats, stagedRows) = footerMetaAll(s, root, staged, effStats)
-    val stagedBlooms = buildBlooms(s, dir, staged, effBlooms, stagedRows)
+      already.flatMap(_.declaredBucket), effStats, effBlooms)
     var duplicate = false
     val snap = commitLoop(root) { latest =>
       if (latest.exists(_.txns.get(appId).exists(_ >= batchId))) { duplicate = true; None }
-      else Some(Ledger(latest.map(_.files).getOrElse(Vector.empty) ++ staged,
+      else Some(Ledger(latest.map(_.files).getOrElse(Vector.empty) ++ st.files,
         latest.map(_.txns).getOrElse(Map.empty) + (appId -> batchId),
-        latest.map(_.stats).getOrElse(Map.empty) ++ stagedStats, "batch",
+        latest.map(_.stats).getOrElse(Map.empty) ++ st.stats, "batch",
         Some(evolveSchema(latest.flatMap(_.schema), df.schema)),
-        latest.map(_.blooms).getOrElse(Map.empty) ++ stagedBlooms,
-        latest.map(_.rows).getOrElse(Map.empty) ++ stagedRows,
-        buckets = stagedBuckets))
+        latest.map(_.blooms).getOrElse(Map.empty) ++ st.blooms,
+        latest.map(_.rows).getOrElse(Map.empty) ++ st.rows,
+        buckets = st.buckets))
     }.get
-    if (duplicate) staged.foreach(f => Files.deleteIfExists(root.resolve(f)))
+    if (duplicate) st.files.foreach(f => Files.deleteIfExists(root.resolve(f)))
     snap
   }
 
@@ -3202,9 +3273,15 @@ object ManifestLake {
             .observe(survivorObs, cnt(lit(1)).as("rows"))
             .unionByName(alignedChecked)
         }
-      val stagedPair = stageFiles(s, root, toStage, partitionCol,
-        maxRecordsPerFile = 1024 * 1024, Map.empty, snap.declaredBucket)
-      val staged = stagedPair._1
+      // 4. stage with skipping metadata for every written file, then
+      // one CAS swap
+      val statsCols = snap.stats.valuesIterator.flatten.map(_.col)
+        .toSeq.distinct.sorted
+      val bloomCols = snap.blooms.valuesIterator.flatten.map(_.col)
+        .toSeq.distinct.sorted
+      val st = stageFiles(s, root, toStage, partitionCol,
+        maxRecordsPerFile = 1024 * 1024, Map.empty, snap.declaredBucket,
+        statsCols, bloomCols)
       val survivorRows: Long =
         if (affected.isEmpty) 0L
         else survivorObs.get("rows") match {
@@ -3212,15 +3289,7 @@ object ManifestLake {
           case other   => other.toString.toLong
         }
 
-      // 4. skipping metadata for every written file, then one CAS swap
       val removedSet = affected.toSet
-      val newFiles = staged
-      val statsCols = snap.stats.valuesIterator.flatten.map(_.col)
-        .toSeq.distinct.sorted
-      val (newStats, newRows) = footerMetaAll(s, root, newFiles, statsCols)
-      val bloomCols = snap.blooms.valuesIterator.flatten.map(_.col)
-        .toSeq.distinct.sorted
-      val newBlooms = buildBlooms(s, dir, newFiles, bloomCols, newRows)
 
       // CDF-enabled lakes record the merge's EXACT three-way change
       // record (the attribution the SQL-path diff cannot reconstruct):
@@ -3258,12 +3327,12 @@ object ManifestLake {
             throw new IllegalStateException(
               "a concurrent commit replaced files this merge rewrote — " +
                 "re-run merge against the new snapshot")
-          Some(Ledger(latest.files.filterNot(removedSet.contains) ++ newFiles,
-            latest.txns, latest.stats -- removedSet ++ newStats, "merge",
+          Some(Ledger(latest.files.filterNot(removedSet.contains) ++ st.files,
+            latest.txns, latest.stats -- removedSet ++ st.stats, "merge",
             latest.schema,
-            latest.blooms -- removedSet ++ newBlooms,
-            latest.rows -- removedSet ++ newRows,
-            buckets = stagedPair._2, cdf = cdfStaged))
+            latest.blooms -- removedSet ++ st.blooms,
+            latest.rows -- removedSet ++ st.rows,
+            buckets = st.buckets, cdf = cdfStaged))
       }
       // rows removed = affected-file rows before minus the survivor
       // rows the fused stage observed — metadata + an observed metric,
@@ -3346,7 +3415,7 @@ object ManifestLake {
     val (newStats, newRows) = footerMetaAll(s, root, added, statsCols)
     val bloomCols = snap.blooms.valuesIterator.flatten.map(_.col)
       .toSeq.distinct.sorted
-    val newBlooms = buildBlooms(s, dir, added, bloomCols, newRows)
+    val newBlooms = buildBlooms(s, dir, added, bloomCols, newRows, snap.schema)
     // CDF-enabled lakes reconstruct the SQL rewrite's change record as
     // an exact removed-vs-added multiset diff — see [[cdfDiff]]
     val cdfStaged: Vector[String] =
@@ -3641,29 +3710,27 @@ object ManifestLake {
       if (affected.forall(snap.rows.contains)) affected.flatMap(snap.netRows).sum
       else parMapMeta(affected)(f => rowCount(s, root.resolve(f)) -
         snap.dvs.get(f).fold(0L)(_.count)).sum
-    val (newFiles, newBuckets): (Vector[String], Map[String, Int]) = {
+    val uniformCols = affected.map(f =>
+        snap.stats.getOrElse(f, Vector.empty).map(_.col).toSet)
+      .reduceOption(_ intersect _).getOrElse(Set.empty)
+    // same uniformity rule for the bloom index: kept rewrites of
+    // uniformly-bloomed files re-derive their filters (built as the
+    // survivors are written), so a delete never silently erodes
+    // point-lookup skipping
+    val uniformBloomCols = affected.map(f =>
+        snap.blooms.getOrElse(f, Vector.empty).map(_.col).toSet)
+      .reduceOption(_ intersect _).getOrElse(Set.empty)
+    val st = {
       val survivors = toPhysical(snap,
         toLogical(snap, lakeFiles(s, dir, snap, affected, snap.schema))
           .filter(!coalesce(predicate, lit(false))))
       stageFiles(s, root, survivors, partitionCol,
-        maxRecordsPerFile = 1024 * 1024, Map.empty, snap.declaredBucket)
+        maxRecordsPerFile = 1024 * 1024, Map.empty, snap.declaredBucket,
+        uniformCols.toSeq.sorted, uniformBloomCols.toSeq.sorted)
     }
 
     beforeCommit()
     val removedSet = affected.toSet
-    val uniformCols = affected.map(f =>
-        snap.stats.getOrElse(f, Vector.empty).map(_.col).toSet)
-      .reduceOption(_ intersect _).getOrElse(Set.empty)
-    val (newStats, newRows) =
-      footerMetaAll(s, root, newFiles, uniformCols.toSeq.sorted)
-    // same uniformity rule for the bloom index: kept rewrites of
-    // uniformly-bloomed files re-derive their filters (one narrow scan
-    // of the survivors), so a delete never silently erodes point-lookup
-    // skipping
-    val uniformBloomCols = affected.map(f =>
-        snap.blooms.getOrElse(f, Vector.empty).map(_.col).toSet)
-      .reduceOption(_ intersect _).getOrElse(Set.empty)
-    val newBlooms = buildBlooms(s, dir, newFiles, uniformBloomCols.toSeq.sorted)
     commitLoop(root) {
       case None => throw new IllegalStateException(s"manifest vanished from $dir")
       case Some(latest) =>
@@ -3671,23 +3738,25 @@ object ManifestLake {
           throw new IllegalStateException(
             "a concurrent commit replaced files this delete rewrote — " +
               "re-run deleteWhere against the new snapshot")
-        Some(Ledger(latest.files.filterNot(removedSet.contains) ++ newFiles,
-          latest.txns, latest.stats -- removedSet ++ newStats, "delete",
+        Some(Ledger(latest.files.filterNot(removedSet.contains) ++ st.files,
+          latest.txns, latest.stats -- removedSet ++ st.stats, "delete",
           latest.schema,
-          latest.blooms -- removedSet ++ newBlooms,
-          latest.rows -- removedSet ++ newRows,
-          buckets = newBuckets, cdf = cdfStaged))
+          latest.blooms -- removedSet ++ st.blooms,
+          latest.rows -- removedSet ++ st.rows,
+          buckets = st.buckets, cdf = cdfStaged))
     }
     // deleted = affected rows before minus survivor rows after, both
     // from metadata (manifest rows: / the commit's own footer pass)
-    rowsBefore - newRows.values.sum
+    rowsBefore - st.rows.values.sum
   }
 
   /** Self-derived detection candidates for a Scala-API / CALL DML
-    * predicate: resolve it against the committed schema (analysis on
-    * an empty frame — no data touched), translate its prunable
-    * conjuncts ([[GraftPrune.filtersOf]]), and keep only files the
-    * manifest says can hold a match. The SQL DML paths get this
+    * predicate: resolve it against the committed LOGICAL schema — the
+    * names the caller sees (analysis on an empty frame — no data
+    * touched), translate its prunable conjuncts
+    * ([[GraftPrune.filtersOf]]) and map them to the physical names the
+    * manifest's stats, blooms and directories are keyed on, and keep
+    * only files the manifest says can hold a match. The SQL DML paths get this
     * pruning from Spark's own filter translation; this gives the
     * direct APIs the same bound, so a clustered-range DV delete on a
     * million-file lake opens the overlapping files, not all of them.
@@ -3699,13 +3768,15 @@ object ManifestLake {
                                    predicate: org.apache.spark.sql.Column): Option[Vector[String]] = {
     val schema = snap.schema.getOrElse(return None)
     val cond =
-      try s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      try s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+          snap.logicalSchema.get)
         .filter(predicate).queryExecution.analyzed.collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
         }
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     cond.flatMap { c =>
       val fs = GraftPrune.filtersOf(c)
+        .map(GraftPrune.mapRefs(_, n => snap.physicalName(n).getOrElse(n)))
       if (fs.isEmpty) None
       else {
         val pcol = snap.files.headOption.map(_.takeWhile(_ != '='))
@@ -4168,11 +4239,10 @@ object ManifestLake {
       val uniformBlooms = snap.files
         .map(f => snap.blooms.getOrElse(f, Vector.empty).map(_.col).toSet)
         .reduceOption(_ intersect _).getOrElse(Set.empty[String]).toSeq.sorted
-      val (staged, stagedBuckets) = stageFiles(s, root,
+      val st = stageFiles(s, root,
         withCheckConstraints(updatedImage, snap.constraints, snap.renames), partitionCol,
-        maxRecordsPerFile = 1024 * 1024, Map.empty, snap.declaredBucket)
-      val (stagedStats, stagedRows) = footerMetaAll(s, root, staged, uniformStats)
-      val stagedBlooms = buildBlooms(s, dir, staged, uniformBlooms, stagedRows)
+        maxRecordsPerFile = 1024 * 1024, Map.empty, snap.declaredBucket,
+        uniformStats, uniformBlooms)
 
       beforeCommit()
       val touched = updates.map(_._1).toSet
@@ -4189,10 +4259,10 @@ object ManifestLake {
                 "a concurrent DV write touched the same files — " +
                   "re-run updateWhereDv against the new snapshot")
           }
-          Some(Ledger(latest.files ++ staged, latest.txns,
-            latest.stats ++ stagedStats, "update-dv", latest.schema,
-            latest.blooms ++ stagedBlooms, latest.rows ++ stagedRows,
-            buckets = stagedBuckets,
+          Some(Ledger(latest.files ++ st.files, latest.txns,
+            latest.stats ++ st.stats, "update-dv", latest.schema,
+            latest.blooms ++ st.blooms, latest.rows ++ st.rows,
+            buckets = st.buckets,
             dvs = Some(latest.dvs ++ updates.map { case (f, rel, c) =>
               f -> DvStore.Dv(rel, c) })))
       }
@@ -4659,12 +4729,10 @@ object ManifestLake {
       }
       val effStats = (statsCols ++ snap.declaredStatsCols).distinct
       val effBlooms = (bloomCols ++ snap.declaredBloomCols).distinct
-      val (staged, stagedBuckets) = stageFiles(s, root,
+      val st = stageFiles(s, root,
         withCheckConstraints(rows, snap.constraints, snap.renames),
         partitionCol, maxRecordsPerFile = 1024 * 1024, Map.empty,
-        snap.declaredBucket)
-      val (stagedStats, stagedRows) = footerMetaAll(s, root, staged, effStats)
-      val stagedBlooms = buildBlooms(s, dir, staged, effBlooms, stagedRows)
+        snap.declaredBucket, effStats, effBlooms)
 
       var duplicate = false
       val touched = updates.map(_._1).toSet
@@ -4683,18 +4751,18 @@ object ManifestLake {
                   "a concurrent DV delete touched the same files — " +
                     "re-run against the new snapshot")
             }
-            Some(Ledger(latest.files ++ staged,
+            Some(Ledger(latest.files ++ st.files,
               latest.txns + (appId -> batchId),
-              latest.stats ++ stagedStats, "replace-keys",
+              latest.stats ++ st.stats, "replace-keys",
               Some(evolveSchema(latest.schema, rows.schema)),
-              latest.blooms ++ stagedBlooms,
-              latest.rows ++ stagedRows,
-              buckets = stagedBuckets,
+              latest.blooms ++ st.blooms,
+              latest.rows ++ st.rows,
+              buckets = st.buckets,
               dvs = Some(latest.dvs ++ updates.map { case (f, rel, c) =>
                 f -> DvStore.Dv(rel, c) })))
           }
       }
-      if (duplicate) staged.foreach(f => Files.deleteIfExists(root.resolve(f)))
+      if (duplicate) st.files.foreach(f => Files.deleteIfExists(root.resolve(f)))
       !duplicate
     } finally { keyFrame.foreach(_.unpersist()); () }
   }
@@ -5853,7 +5921,8 @@ object ManifestLake {
       .filter(_._1.nonEmpty)
       .groupBy(_._1)
       .flatMap { case (uniform, group) =>
-        buildBlooms(s, dir, group.flatMap(_._2).toVector, uniform.toSeq.sorted)
+        buildBlooms(s, dir, group.flatMap(_._2).toVector, uniform.toSeq.sorted,
+          schema = snap.schema)
       }
 
     // ONE commit for all swaps, rebased on whatever committed since our
@@ -5944,12 +6013,10 @@ object ManifestLake {
     if (untagged.isEmpty) return 0
     val partitionCol = untagged.head.takeWhile(_ != '=')
     val df = lakeFiles(s, dir, snap, untagged, snap.schema)
-    val (news, newBuckets) = stageFiles(s, root, df, partitionCol,
-      maxRecordsPerFile = 1024 * 1024, Map.empty, Some(spec))
-    val statsCols = snap.stats.valuesIterator.flatten.map(_.col).toSeq.distinct.sorted
-    val (newStats, newRows) = footerMetaAll(s, root, news, statsCols)
-    val bloomCols = snap.blooms.valuesIterator.flatten.map(_.col).toSeq.distinct.sorted
-    val newBlooms = buildBlooms(s, dir, news, bloomCols, newRows)
+    val st = stageFiles(s, root, df, partitionCol,
+      maxRecordsPerFile = 1024 * 1024, Map.empty, Some(spec),
+      snap.stats.valuesIterator.flatten.map(_.col).toSeq.distinct.sorted,
+      snap.blooms.valuesIterator.flatten.map(_.col).toSeq.distinct.sorted)
     val removedSet = untagged.toSet
     beforeCommit()
     commitLoop(root) {
@@ -5959,12 +6026,12 @@ object ManifestLake {
           throw new IllegalStateException(
             "a concurrent commit replaced files this rebucket rewrote — " +
               "re-run against the new snapshot")
-        Some(Ledger(latest.files.filterNot(removedSet.contains) ++ news,
-          latest.txns, latest.stats -- removedSet ++ newStats, "rebucket",
+        Some(Ledger(latest.files.filterNot(removedSet.contains) ++ st.files,
+          latest.txns, latest.stats -- removedSet ++ st.stats, "rebucket",
           latest.schema,
-          latest.blooms -- removedSet ++ newBlooms,
-          latest.rows -- removedSet ++ newRows,
-          buckets = newBuckets))
+          latest.blooms -- removedSet ++ st.blooms,
+          latest.rows -- removedSet ++ st.rows,
+          buckets = st.buckets))
     }
     untagged.length
   }

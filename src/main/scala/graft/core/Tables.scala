@@ -32,7 +32,11 @@ object Tables {
       sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"),
     // graft_dot / graft_polyhash / find_islands + the HOF dot-product
     // rewrite rule, installed at session build (see GraftExtensions).
-    "spark.sql.extensions" -> "graft.GraftExtensions")
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // local files through a LocalFileSystem that sets permissions with
+    // java.nio instead of forking `chmod` per file and directory when
+    // the native Hadoop library is missing (see NioLocalFileSystem)
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName)
 
   /** Kind-level schema contract, checked on every read (SURVEY §1.3's
     * "explicit StructType, checked on read", generalized from the

@@ -15,18 +15,18 @@ import graft.islands.IslandMath
   * Array[Double] → rows (start, end)"): the SQL surface of the
   * run-length threshold segmentation (build_islands_from_scores.py:
   * 82-116), emitting one (start_idx, end_idx) row per island exactly
-  * like explode emits elements. The relational gaps-and-islands form
-  * (Islands.islandsFromArray) stays the plan of choice for full-table
-  * scans (window machinery, no per-row interpretation); the generator
-  * gives ad-hoc SQL users the operator without knowing the window
-  * idiom:
+  * like explode emits elements. It is the plan for full-table scans
+  * too: Islands.islandsFromArray evaluates it per row, where a
+  * gaps-and-islands window form would explode every element and
+  * shuffle it. SQL users reach it as
   *
   * {{{ SELECT vec_id, i.* FROM sm LATERAL VIEW find_islands(smoothed, 0.2, 3) i }}}
   *
   * Evaluation is one pass per row over the scalar port — a Generator
   * is CodegenFallback by nature, which is fine: it runs once per row,
-  * not once per element. IslandsSpec pins generator ≡ relational ≡
-  * scalar.
+  * not once per element. A null element reads as NaN, so like NaN it
+  * is never at or above the threshold and ends a run. IslandsSpec pins
+  * generator ≡ scalar ≡ the window form on NaN-free data.
   */
 case class FindIslandsGenerator(arr: Expression, threshold: Expression, minLen: Expression)
   extends Expression with Generator with CodegenFallback {
@@ -52,7 +52,9 @@ case class FindIslandsGenerator(arr: Expression, threshold: Expression, minLen: 
     val thr = threshold.eval(input)
     val ml = minLen.eval(input)
     if (thr == null || ml == null) return Nil
-    val data = a.asInstanceOf[ArrayData].toDoubleArray()
+    val ad = a.asInstanceOf[ArrayData]
+    val data = Array.tabulate(ad.numElements())(i =>
+      if (ad.isNullAt(i)) Double.NaN else ad.getDouble(i))
     IslandMath.findIslands(data, thr.asInstanceOf[Double], ml.asInstanceOf[Int])
       .map { case (s, e) => InternalRow(s, e) }
   }

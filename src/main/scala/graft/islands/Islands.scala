@@ -2,12 +2,14 @@ package graft.islands
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import graft.core.Tables
+import graft.expr.FindIslandsGenerator
 
 /** The islands pipeline (SURVEY.md §3.2) re-expressed relationally:
   * Gaussian smoothing as codegen'd higher-order array functions (W6-W7),
-  * find_islands as the gaps-and-islands window pattern (W8), score-index
+  * find_islands as a per-row generator (W8), score-index
   * → word range arithmetic (W9), word → time via an interval-overlap
   * range join (W10/J12), and the raw-score island average (A8).
   *
@@ -18,12 +20,12 @@ import graft.core.Tables
   * the reference's (see IslandMath for the scalar ports + fixture
   * specs on the reference's own numbers).
   *
-  * Scale notes: smoothing/thresholding are per-row narrow ops (no
-  * shuffle); the gaps-and-islands windows partition by vec_id (one
-  * shuffle on the natural key); the segment join is an interval
-  * overlap scoped to the same vec_id — an equi-join on vec_id with a
-  * range predicate, NOT a blind theta join, so it shuffles on vec_id
-  * and stays linear at 100 TB.
+  * Scale notes: smoothing and island finding are per-row narrow ops
+  * (no shuffle — each score array is scanned once by the
+  * [[graft.expr.FindIslandsGenerator]]); the segment join is an
+  * interval overlap scoped to the same vec_id — an equi-join on vec_id
+  * with a range predicate, NOT a blind theta join, so it shuffles on
+  * vec_id and stays linear at 100 TB.
   */
 object Islands {
 
@@ -96,27 +98,18 @@ object Islands {
          FROM convd)"""
   }
 
-  /** W8 as relational gaps-and-islands over an exploded array column:
-    * flag positions ≥ threshold, derive run ids from a boundary cumsum,
-    * keep runs with end − start ≥ minLen. Generic over the grouping
-    * key; one shuffle on `idCol`. Exactly IslandMath.findIslands
-    * (above-threshold mode) — IslandsSpec cross-checks the two forms. */
+  /** W8: the reference's run-length scan (IslandMath.findIslands,
+    * above-threshold mode) evaluated once per row by the
+    * [[graft.expr.FindIslandsGenerator]] — one (idCol, start_idx,
+    * end_idx) row per island, no explode, window or shuffle. Generic
+    * over the grouping key; any numeric array casts to array<double>.
+    * A NaN or null element is never at or above the threshold, so it
+    * ends a run (numpy's `>=`). */
   def islandsFromArray(df: DataFrame, idCol: String, arrCol: String,
-                       threshold: Double, minLen: Int): DataFrame = {
-    val wOrd = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.select(col(idCol), posexplode(col(arrCol)).as(Seq("pos", "v")))
-      .withColumn("flag", col("v") >= threshold)
-      .withColumn("boundary",
-        when(lag(col("flag"), 1).over(wOrd).isNull ||
-          lag(col("flag"), 1).over(wOrd) =!= col("flag"), 1).otherwise(0))
-      .withColumn("seg", sum(col("boundary")).over(wRun))
-      .filter(col("flag"))
-      .groupBy(col(idCol), col("seg"))
-      .agg(min(col("pos")).as("start_idx"), max(col("pos")).as("end_idx"))
-      .filter(col("end_idx") - col("start_idx") >= minLen)
-      .select(col(idCol), col("start_idx"), col("end_idx"))
-  }
+                       threshold: Double, minLen: Int): DataFrame =
+    df.select(col(idCol), GraftSqlBridge.column(FindIslandsGenerator(
+      GraftSqlBridge.expression(col(arrCol).cast("array<double>")),
+      Literal(threshold), Literal(minLen))))
 
   /** W10/J12: map 1-based word ranges to time ranges against a segment
     * table — interval-overlap join (equi on the id + range predicate),

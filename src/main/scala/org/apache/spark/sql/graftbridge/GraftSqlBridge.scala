@@ -2,12 +2,14 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.classic.{SparkSession => ClassicSession, Dataset => ClassicDataset}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitioningUtils}
+import org.apache.spark.sql.classic.{ExpressionUtils, SparkSession => ClassicSession, Dataset => ClassicDataset}
+import org.apache.spark.internal.io.FileCommitProtocol
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{FileFormatWriter, FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitioningUtils, WriteJobStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -33,6 +35,48 @@ object GraftSqlBridge {
     val classic = data.asInstanceOf[ClassicDataset[Row]]
     val rows: RDD[InternalRow] = classic.queryExecution.toRdd
     classic.sparkSession.internalCreateDataFrame(rows, data.schema, isStreaming = false)
+  }
+
+  /** A Catalyst expression as a Column, and back — the classic
+    * conversions are `private[sql]` in Spark 4. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Write `df` as parquet under `outputPath`, partitioned into
+    * `partitionCols` directories, in ONE Spark job — the shape of
+    * `df.write.partitionBy(..).options(..).parquet(outputPath)`, but
+    * through `FileFormatWriter` directly so the caller's
+    * [[WriteJobStatsTracker]]s see every row as it is written (Delta's
+    * `TransactionalWrite` + `DeltaJobStatisticsTracker` pattern).
+    * Empty-string partition values become null (the
+    * `__HIVE_DEFAULT_PARTITION__` directory), as in the writer API.
+    * Runs as a named SQL execution, so `Observation`s on `df` and
+    * session QueryExecutionListeners fire as they do for `df.write`. */
+  def writeParquet(spark: SparkSession, df: DataFrame, outputPath: String,
+                   partitionCols: Seq[String], options: Map[String, String],
+                   trackers: Seq[WriteJobStatsTracker]): Unit = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import org.apache.spark.sql.types.StringType
+    val classic = spark.asInstanceOf[ClassicSession]
+    val nulled = partitionCols.foldLeft(df) { (d, c) =>
+      val ref = col("`" + c.replace("`", "``") + "`")
+      if (d.schema(c).dataType != StringType) d
+      else d.withColumn(c, when(ref === "", lit(null)).otherwise(ref))
+    }
+    val qe = nulled.asInstanceOf[ClassicDataset[Row]].queryExecution
+    val output = qe.analyzed.output
+    val partAttrs = partitionCols.map(c => output.find(_.name == c).getOrElse(
+      throw new IllegalArgumentException(s"partition column '$c' not in ${output.map(_.name)}")))
+    val committer = FileCommitProtocol.instantiate(
+      classic.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, outputPath, false)
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      FileFormatWriter.write(classic, qe.executedPlan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(outputPath, Map.empty, output),
+        classic.sessionState.newHadoopConfWithOptions(options), partAttrs,
+        None, trackers, options)
+    }
+    ()
   }
 
   /** One already-statted lake data file: absolute filesystem path, byte

@@ -14,28 +14,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. bounded false-positive rate at the committed sizing
   *     (10 bits/key, k=7 ⇒ ~0.8 %; asserted ≤ 3 % with slack);
   *  4. the empty filter contains nothing.
-  * Insertion here replays the same Kirsch–Mitzenmacher loop the
-  * executor-side build runs — both sides call [[ManifestLake.BloomHash]],
-  * so this spec pins the shared scalar contract.
+  * Insertion here runs the sizing and bit-setting routine both builds
+  * call ([[ManifestLake.BloomHash]]`.words`/`.setBits`) and probes with
+  * the driver's `mightContain`, so this spec pins the shared scalar
+  * contract.
   */
 class BloomPropertySpec extends AnyFunSuite {
-  import ManifestLake.{BloomBitsPerKey, BloomHash, BloomK, FileBloom}
+  import ManifestLake.{BloomHash, BloomK, FileBloom}
 
   private def build(values: Seq[Any]): FileBloom = {
-    var bits = 64L
-    val wanted = math.max(64L, values.length * BloomBitsPerKey)
-    while (bits < wanted) bits <<= 1
-    val arr = new Array[Long]((bits / 64).toInt)
-    val m = bits
-    values.foreach { v =>
-      val (h1, h2) = BloomHash.pair(v)
-      var i = 0
-      while (i < BloomK) {
-        val pos = java.lang.Long.remainderUnsigned(h1 + i.toLong * h2, m).toInt
-        arr(pos >>> 6) |= 1L << (pos & 63)
-        i += 1
-      }
-    }
+    val arr = new Array[Long](BloomHash.words(values.length.toLong))
+    values.foreach(v => BloomHash.setBits(arr, BloomK, BloomHash.canonical(v)))
     FileBloom("c", BloomK, arr)
   }
 

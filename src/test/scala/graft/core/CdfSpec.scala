@@ -84,6 +84,37 @@ class CdfSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("copy-on-write")), e.toString)
   }
 
+  test("CDF stream under Trigger.AvailableNow drains one version per micro-batch with maxVersionsPerTrigger=1") {
+    val dir = tmp("cdf_avail_now")
+    mkLake(dir)                                                    // v1
+    ManifestLake.deleteWhereDv(spark, dir, $"doc_id" % 10 === 3)   // v2
+    ManifestLake.updateWhereDv(spark, dir, $"doc_id" === 4,
+      Seq("n_chars" -> lit(-1L)))                                  // v3
+    ManifestLake.append(spark, dir, spark.range(1000, 1010)
+      .select($"id".as("doc_id"), lit("s0").as("source"),
+        ($"id" * 10).as("n_chars")), "source")                     // v4
+    val windows = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
+    val ckpt = Files.createTempDirectory("cdf_avail_ckpt").toString
+    val q = spark.readStream.format("graft").option("path", dir)
+      .option("readChangeFeed", "true")
+      .option("maxVersionsPerTrigger", "1").load()
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        windows.add(df.select($"_commit_version").distinct().as[Long].collect().toSet)
+        ()
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try assert(q.awaitTermination(120000), "AvailableNow drain must terminate")
+    finally q.stop()
+    import scala.jdk.CollectionConverters._
+    val ws = windows.asScala.toVector.filter(_.nonEmpty)
+    assert(ws.length > 1, s"AvailableNow ran one micro-batch: $ws")
+    assert(ws.forall(_.size <= 1), s"a window covered several versions: $ws")
+    assert(ws.flatten.sorted == Vector(1L, 2L, 3L, 4L), ws.toString)
+  }
+
   test("streaming change feed tails row-level changes; COW kills it") {
     val dir = tmp("cdf_stream")
     mkLake(dir)                                                    // v1

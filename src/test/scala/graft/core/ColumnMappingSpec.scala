@@ -152,6 +152,23 @@ class ColumnMappingSpec extends SparkSpec {
     assert(e3.getMessage.contains("chars_nonneg"), e3.getMessage)
   }
 
+  test("a DV delete over a renamed column's logical name prunes files through the manifest") {
+    val dir = tmp("cm_prune")
+    mkLake(dir)                                                   // v1
+    ManifestLake.renameColumn(dir, "n_chars", "chars")            // v2
+    val snap = ManifestLake.latestSnapshot(dir).get
+    val cands = ManifestLake.selfCandidates(spark, snap, $"chars" > 900)
+    assert(cands.isDefined, "the logical-name predicate must resolve")
+    assert(cands.get.nonEmpty && cands.get.length < snap.files.length,
+      s"${cands.get.length} of ${snap.files.length} files kept")
+    // every file holding a match survives the pruning
+    val holding = snap.files.filter(f =>
+      !spark.read.parquet(s"$dir/$f").filter($"n_chars" > 900).isEmpty).toSet
+    assert(holding.nonEmpty && holding.subsetOf(cands.get.toSet))
+    assert(ManifestLake.deleteWhereDv(spark, dir, $"chars" > 900) == 9L)
+    assert(ManifestLake.read(spark, dir).count() == 91L)
+  }
+
   test("SQL face: ALTER TABLE RENAME/DROP COLUMN; SELECT, INSERT, UPDATE, DELETE all translate; time travel era-correct") {
     val dir = tmp("cm_sql")
     mkLake(dir)                                                   // v1

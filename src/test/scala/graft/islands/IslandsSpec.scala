@@ -2,26 +2,97 @@ package graft.islands
 
 import graft.SparkSpec
 
-/** Relational islands vs the exact scalar ports, plus the FIXTURES.md
-  * §4 index→word→time mapping case. */
+/** Per-row islands vs the exact scalar ports and the relational
+  * gaps-and-islands window form, plus the FIXTURES.md §4
+  * index→word→time mapping case. */
 class IslandsSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
+
+  /** The relational gaps-and-islands form (posexplode, two windows and
+    * a groupBy) that `Islands.islandsFromArray` replaced — kept as an
+    * independent oracle. Spark orders NaN above every double, so on a
+    * NaN element it differs from the scalar scan (see the NaN test). */
+  private def windowIslands(df: DataFrame, idCol: String, arrCol: String,
+                            threshold: Double, minLen: Int): DataFrame = {
+    val wOrd = Window.partitionBy(col(idCol)).orderBy(col("pos"))
+    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.select(col(idCol), posexplode(col(arrCol)).as(Seq("pos", "v")))
+      .withColumn("flag", col("v") >= threshold)
+      .withColumn("boundary",
+        when(lag(col("flag"), 1).over(wOrd).isNull ||
+          lag(col("flag"), 1).over(wOrd) =!= col("flag"), 1).otherwise(0))
+      .withColumn("seg", sum(col("boundary")).over(wRun))
+      .filter(col("flag"))
+      .groupBy(col(idCol), col("seg"))
+      .agg(min(col("pos")).as("start_idx"), max(col("pos")).as("end_idx"))
+      .filter(col("end_idx") - col("start_idx") >= minLen)
+      .select(col(idCol), col("start_idx"), col("end_idx"))
+  }
+
+  private def triples(df: DataFrame): Set[(Long, Int, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
 
   test("relational gaps-and-islands == IslandMath.findIslands on sf0.001") {
     val df = Islands.smoothed(spark, Sf0001).select($"vec_id", $"smoothed")
-    val relational = Islands
-      .islandsFromArray(df, "vec_id", "smoothed", Islands.Threshold, Islands.MinLen)
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-      .toSet
+    val perRow = triples(Islands
+      .islandsFromArray(df, "vec_id", "smoothed", Islands.Threshold, Islands.MinLen))
+    val relational = triples(
+      windowIslands(df, "vec_id", "smoothed", Islands.Threshold, Islands.MinLen))
     val scalar = df.collect().flatMap { r =>
       val arr = r.getSeq[Double](1).toArray
       IslandMath.findIslands(arr, Islands.Threshold, Islands.MinLen)
         .map { case (s, e) => (r.getLong(0), s, e) }
     }.toSet
-    assert(relational.nonEmpty)
+    assert(perRow.nonEmpty)
+    assert(perRow == scalar)
     assert(relational == scalar)
+  }
+
+  test("islandsFromArray plans no window, explode or shuffle") {
+    val df = Islands.smoothed(spark, Sf0001).select($"vec_id", $"smoothed")
+    val plan = Islands.islandsFromArray(df, "vec_id", "smoothed",
+      Islands.Threshold, Islands.MinLen).queryExecution.executedPlan.toString
+    Seq("Window", "Exchange", "posexplode", "Aggregate").foreach(op =>
+      assert(!plan.contains(op), s"$op in\n$plan"))
+    assert(plan.contains("Generate"), plan)
+  }
+
+  test("a NaN run is no island per row; the window form ranks NaN above the threshold") {
+    val df = Seq((1L, Seq(0.0, Double.NaN, Double.NaN, Double.NaN, Double.NaN, 0.0)),
+      (2L, Seq(0.9, 0.9, Double.NaN, 0.9, 0.9, 0.9)))
+      .toDF("id", "arr")
+    val perRow = triples(Islands.islandsFromArray(df, "id", "arr", 0.6, 2))
+    // numpy's `>=` is false on NaN: NaN ends a run, never extends one
+    assert(perRow == Set((2L, 3, 5)))
+    assert(perRow == Set(
+      1L -> Array(0.0, Double.NaN, Double.NaN, Double.NaN, Double.NaN, 0.0),
+      2L -> Array(0.9, 0.9, Double.NaN, 0.9, 0.9, 0.9)).flatMap { case (id, a) =>
+        IslandMath.findIslands(a, 0.6, 2).map { case (s, e) => (id, s, e) } })
+    // the old window form: Spark orders NaN above every double
+    assert(triples(windowIslands(df, "id", "arr", 0.6, 2)) ==
+      Set((1L, 1, 4), (2L, 0, 5)))
+  }
+
+  test("null elements split runs; null and empty arrays yield no islands") {
+    val df = Seq[(Long, Option[Seq[java.lang.Double]])](
+        (1L, Some(Seq[java.lang.Double](0.9, 0.9, 0.9, null, 0.9, 0.9, 0.9, 0.9))),
+        (2L, Some(Seq[java.lang.Double](null, null, null))),
+        (3L, Some(Seq.empty[java.lang.Double])),
+        (4L, None))
+      .toDF("id", "arr")
+    val perRow = triples(Islands.islandsFromArray(df, "id", "arr", 0.6, 2))
+    assert(perRow == Set((1L, 0, 2), (1L, 4, 7)))
+    assert(triples(windowIslands(df, "id", "arr", 0.6, 2)) == perRow)
+  }
+
+  test("islandsFromArray takes a float array and keeps its output columns") {
+    val df = Seq((7L, Seq(0.1f, 0.7f, 0.8f, 0.9f, 0.1f))).toDF("k", "a")
+    val out = Islands.islandsFromArray(df, "k", "a", 0.6, 2)
+    assert(out.columns.toSeq == Seq("k", "start_idx", "end_idx"))
+    assert(triples(out) == Set((7L, 1, 3)))
   }
 
   test("find_islands SQL generator == relational form on sf0.001") {
@@ -32,10 +103,12 @@ class IslandsSpec extends SparkSpec {
       s"""SELECT vec_id, i.start_idx, i.end_idx
           FROM sm_gen_test LATERAL VIEW find_islands(smoothed, ${Islands.Threshold}D, ${Islands.MinLen}) i""")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val relational = Islands.qEmbeddingIslands(spark, Sf0001)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+    val relational = triples(windowIslands(
+      Islands.smoothed(spark, Sf0001).select($"vec_id", $"smoothed"),
+      "vec_id", "smoothed", Islands.Threshold, Islands.MinLen))
     assert(viaSql.nonEmpty)
     assert(viaSql == relational)
+    assert(viaSql == triples(Islands.qEmbeddingIslands(spark, Sf0001)))
   }
 
   test("UDF smoothing == IslandMath.smooth bit-for-bit on sf0.001") {
