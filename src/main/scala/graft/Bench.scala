@@ -173,7 +173,7 @@ object Bench {
     // 3 interleaved passes often enough that a med-of-3 cannot reject
     // it: the lifecycle rows recorded driver med >> min inversions
     // (q174 med 53.6 vs min 8.2) on plans whose isolated medians are
-    // flat (ProbeR16: 8 passes at both 8g and 32g heaps, med 9-10 s).
+    // flat (PERF_NOTE_r16.md: 8 passes at both 8g and 32g heaps, med 9-10 s).
     // Rows whose med exceeds 1.5x their min after the interleaved
     // passes get extra samples — the median over 5-7 rejects a spike
     // the median over 3 can't — bounded: only rows with med > 2 s,

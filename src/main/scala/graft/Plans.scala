@@ -5,7 +5,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Generates PLANS.md: `explain("formatted")` output of the headline
   * queries plus the 100 TB commentary — the plan-audit artifact.
-  * Run: `sbt "runMain graft.Plans"`.
+  *
+  * Usage: runMain graft.Plans [sfDir]
+  *        runMain graft.Plans <outDir> <tag> <q1,q2,...> [sfDir]
+  * The second form writes each named query's full formatted plan to
+  * `<outDir>/<query>_<tag>.txt` (tag = "before" | "after") — the
+  * machine-checkable before/after evidence of an optimization round,
+  * e.g. `plans/r18`. sfDir defaults to the sf0.001 testdata dir: plan
+  * SHAPE is sf-independent and the smallest sf keeps the dump fast.
+  * The master is local[SPARK_GRAFT_CPUS] (default 4), as for Verify
+  * and Bench; shuffle partitions stay 8 so plan text stays comparable.
   */
 object Plans {
 
@@ -880,35 +889,58 @@ object Plans {
         |change are multiset-identical by pin. The plan shown is the
         |final aggregate; the interesting work is commit-time.""".stripMargin)
 
-  def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder().master("local[8]")
+  def main(args: Array[String]): Unit = args match {
+    case Array(outDir, tag, names, sf @ _*) =>
+      withSession(sf.toArray)(dumpPlans(_, _, outDir, tag, names.split(",").toSeq))
+    case _ => withSession(args)(writePlansMd)
+  }
+
+  private def withSession(args: Array[String])(body: (SparkSession, String) => Unit): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val b = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
     graft.core.Tables.sessionConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    body(spark, dir)
+    spark.stop()
+  }
+
+  // Same per-query hygiene as Verify/Bench: some plan CONSTRUCTIONS
+  // persist frames and run eager jobs (q89's quantized cache, q90's
+  // training rounds) — without a release a loop over queries
+  // accumulates every query's blocks.
+  private def formatted(spark: SparkSession, dir: String, name: String): String =
+    try SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    finally graft.core.Resources.release()
+
+  private def dumpPlans(spark: SparkSession, dir: String, outDir: String,
+                        tag: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val out = Paths.get(outDir, s"${name}_$tag.txt")
+      try {
+        Files.writeString(out, formatted(spark, dir, name))
+        println(s"[plans] wrote $out")
+      } catch { case e: Throwable => println(s"[plans] $name FAILED: $e") }
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, dir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries\n\n")
     sb.append("Generated by `graft.Plans` (`explain(\"formatted\")` at " + dir + ").\n")
     sb.append("Each plan carries the 100 TB commentary the code was designed against.\n")
     commentary.foreach { case (name, note) =>
-      // Same per-query hygiene as Verify/Bench: some plan
-      // CONSTRUCTIONS persist frames and run eager jobs (q89's
-      // quantized cache, q90's training rounds) — without a release
-      // the regeneration loop accumulates every query's blocks.
-      try {
-        val df = SparkEntry.queries(name)(spark, dir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n## $name\n\n")
-        sb.append(note).append("\n\n```\n")
-        // keep the operator tree; drop the verbose per-node detail section
-        sb.append(plan.split("\n\n").head).append("\n```\n")
-      } finally graft.core.Resources.release()
+      sb.append(s"\n## $name\n\n")
+      sb.append(note).append("\n\n```\n")
+      // keep the operator tree; drop the verbose per-node detail section
+      sb.append(formatted(spark, dir, name).split("\n\n").head).append("\n```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${commentary.size} queries)")
-    spark.stop()
   }
 }

@@ -32,7 +32,8 @@ object ScaleData {
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
     val nFiles = args.lift(3).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[8]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._

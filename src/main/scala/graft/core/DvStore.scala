@@ -4,7 +4,7 @@ import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path => HPath}
 
 /** Deletion-vector sidecars — the merge-on-read half of targeted
   * deletion (Delta's deletion vectors / Iceberg's position deletes,
@@ -72,12 +72,16 @@ private[core] object DvStore {
     require(positions.nonEmpty, "empty deletion vector — omit the entry instead")
     val rel = s"$DvDir/${UUID.randomUUID()}.dv"
     val p = new HPath(lakeDir, rel)
-    val fs = p.getFileSystem(conf)
     // no .crc twins: the format has its own magic, and durability
     // checksums are the underlying store's contract (LocalFileSystem
     // would otherwise shadow every sidecar with a checksum file that
-    // vacuum and tests must special-case)
-    fs.setWriteChecksum(false)
+    // vacuum and tests must special-case). Write through the raw file
+    // system: the checksummed instance is cached and shared JVM-wide,
+    // so turning its checksums off would do it for every later writer.
+    val fs = p.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     val out = new DataOutputStream(new java.io.BufferedOutputStream(fs.create(p, false)))
     try {
       out.write(Magic)

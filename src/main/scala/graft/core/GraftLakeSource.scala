@@ -1281,13 +1281,14 @@ private[graft] final case class GraftScan(
 
   /** File list → bin-packed input splits ([[GraftRead.toSplits]];
     * shared by the batch path and the micro-batch stream, which plans
-    * each CDC window's files sized from that window's manifests).
+    * each CDC window's files sized and DV'd from that window's
+    * manifests).
     * Under SPJ ([[spjKeyed]]) the packing is per partition value —
     * splits never mix keys, and each advertises its key so Spark can
     * group them into co-partitioned tasks. */
   private[core] def planFiles(files: Vector[String],
-      sizes: Map[String, ManifestLake.FileSize] = table.snap.sizes)
-      : Array[InputPartition] = {
+      sizes: Map[String, ManifestLake.FileSize] = table.snap.sizes,
+      dvs: Map[String, DvStore.Dv] = table.snap.dvs): Array[InputPartition] = {
     val spark = SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException("no active SparkSession"))
     def toSplits(fs: Vector[String]): Seq[FilePartition] =
@@ -1298,7 +1299,7 @@ private[graft] final case class GraftScan(
     // ([[DvChainReader]]) so row indexes stay file-absolute
     def plan(fs: Vector[String], key: Option[InternalRow],
              nextIdx: () => Int): Seq[FilePartition] = {
-      val (dvd, clean) = fs.partition(table.snap.dvs.contains)
+      val (dvd, clean) = fs.partition(dvs.contains)
       val packed = toSplits(clean).map { fp => key match {
         case Some(k) => new KeyedFilePartition(nextIdx(), fp.files, k)
         case None    => new FilePartition(nextIdx(), fp.files)
@@ -1306,7 +1307,7 @@ private[graft] final case class GraftScan(
       val dvp = toSplits(dvd).map { fp =>
         val m = fp.files.map { pf =>
           val rel = ManifestLake.relFromUri(pf.filePath.toString)
-          rel -> table.snap.dvs(rel).path
+          rel -> dvs(rel).path
         }.toMap
         key match {
           case Some(k) => new KeyedDvPackedFilePartition(nextIdx(), fp.files, k, m)
@@ -1352,7 +1353,10 @@ private[graft] final case class GraftScan(
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(this)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  override def createReaderFactory(): PartitionReaderFactory =
+    readerFactory(withDvs = effectiveFiles.exists(table.snap.dvs.contains))
+
+  private[core] def readerFactory(withDvs: Boolean): PartitionReaderFactory = {
     val spark = SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException("no active SparkSession"))
     // the parquet layer sees PHYSICAL names throughout (what footers
@@ -1386,7 +1390,7 @@ private[graft] final case class GraftScan(
     // row-based while any DV is present (Spark forbids mixing
     // columnar and row partitions) — transient by compaction.
     val base: PartitionReaderFactory =
-      if (!effectiveFiles.exists(table.snap.dvs.contains)) parquetFactory
+      if (!withDvs) parquetFactory
       else {
         val withIdx = StructType(readData.fields :+ GraftRead.RowIndexField)
         new DvFilteringReaderFactory(parquetFactory, mkFactory(withIdx, Array.empty),
@@ -1637,15 +1641,19 @@ private[core] final class GraftMicroBatchStream(scan: GraftScan)
         throw new IllegalStateException(s"manifest v$v of $dir is missing")))
       val kept = files.filter(f => scan.pushed.forall(
         GraftPrune.survives(window.last, scan.table.partitionCol, f, _)))
-      // size the window's files from the window's own manifests — the
-      // scan's snapshot is the one bound at load(), which knows no file
-      // committed since (each would be statted on every micro-batch)
-      scan.planFiles(kept, window.iterator.flatMap(_.sizes).toMap)
+      // size the window's files from the window's own manifests and
+      // apply the window END's deletion vectors — the scan's snapshot
+      // is the one bound at load(), which knows no file committed since
+      // (each would be statted on every micro-batch) and no DV written
+      // since (a delete inside the window would not apply)
+      scan.planFiles(kept, window.iterator.flatMap(_.sizes).toMap, window.last.dvs)
     }
   }
 
+  // any window may hold a DV'd file, and the reader factory is not
+  // told the window: always read through the DV-aware (row-based) one
   override def createReaderFactory(): PartitionReaderFactory =
-    scan.createReaderFactory()
+    scan.readerFactory(withDvs = true)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }

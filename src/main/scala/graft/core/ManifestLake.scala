@@ -3500,9 +3500,9 @@ object ManifestLake {
       case None => df
       case Some(deleted) =>
         val cols = df.columns.map(col)
-        df.withColumn("__graft_dv_path", col("_metadata.file_path"))
-          .withColumn("__graft_dv_idx", col("_metadata.row_index"))
-          .filter(!deleted(col("__graft_dv_path"), col("__graft_dv_idx")))
+        df.withColumn(DvPathCol, col("_metadata.file_path"))
+          .withColumn(DvIdxCol, col("_metadata.row_index"))
+          .filter(!deleted(col(DvPathCol), col(DvIdxCol)))
           .select(cols.toIndexedSeq: _*)
     }
   }
@@ -3581,14 +3581,46 @@ object ManifestLake {
     if (dvd.isEmpty) None
     else {
       val conf = s.sessionState.newHadoopConf()
-      val positions: Map[String, Array[Long]] =
-        parMapMeta(dvd)(f => f -> DvStore.read(dir, snap.dvs(f).path, conf)).toMap
-      val bc = s.sparkContext.broadcast(positions)
-      val deleted = udf((path: String, idx: Long) =>
-        bc.value.get(relFromUri(path)).exists(DvStore.contains(_, idx)))
-      Some((p, i) => deleted(p, i))
+      Some(positionMember(s,
+        parMapMeta(dvd)(f => f -> DvStore.read(dir, snap.dvs(f).path, conf)).toMap))
     }
   }
+
+  /** `(file_path, row_index) → is the row one of positions`, as a
+    * Column function over ONE broadcast of the position arrays (keyed
+    * by lake-relative file) — the DV filter and the change feed's
+    * position legs. */
+  private def positionMember(s: SparkSession, positions: Map[String, Array[Long]])
+      : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column = {
+    val bc = s.sparkContext.broadcast(positions)
+    val member = udf((path: String, idx: Long) =>
+      bc.value.get(relFromUri(path)).exists(DvStore.contains(_, idx)))
+    (p, i) => member(p, i)
+  }
+
+  private val DvPathCol = "__graft_dv_path"
+  private val DvIdxCol = "__graft_dv_idx"
+
+  /** The detection scan of the DV writers: `files` of `snap` with each
+    * row's position — [[DvPathCol]] (`_metadata.file_path`) and
+    * [[DvIdxCol]] (`_metadata.row_index`) — and the rows an earlier DV
+    * already deleted filtered out. */
+  private def dvDetectionScan(s: SparkSession, dir: String, snap: Snapshot,
+                              files: Vector[String]): DataFrame = {
+    val raw = manifestScan(s, dir, files, snap.schema,
+        restorePartitions = true, snap.sizes)
+      .withColumn(DvPathCol, col("_metadata.file_path"))
+      .withColumn(DvIdxCol, col("_metadata.row_index"))
+    dvDeletedPredicate(s, dir, snap, files).fold(raw)(deleted =>
+      raw.filter(!deleted(col(DvPathCol), col(DvIdxCol))))
+  }
+
+  /** A detection-scan row's position as [[writeDvSidecars]] takes it:
+    * lake-relative file `f`, row index `i`. */
+  private def dvPositions(rows: DataFrame): DataFrame =
+    rows.select(relOfUri(col(DvPathCol)).as("f"), col(DvIdxCol).as("i"))
+
+  private lazy val relOfUri = udf((p: String) => relFromUri(p))
 
   /** Targeted record deletion — the contamination-removal / GDPR
     * primitive (q68/q80 produce decontamination REPORTS; this is the
@@ -3942,19 +3974,12 @@ object ManifestLake {
       case None => selfCandidates(s, snap, predicate).getOrElse(snap.files)
     }
     if (scanFiles.isEmpty) return 0L
-    val raw = manifestScan(s, dir, scanFiles, snap.schema,
-        restorePartitions = true, snap.sizes)
-      .withColumn("__graft_dv_path", col("_metadata.file_path"))
-      .withColumn("__graft_dv_idx", col("_metadata.row_index"))
-    val alive = dvDeletedPredicate(s, dir, snap, scanFiles).fold(raw)(deleted =>
-      raw.filter(!deleted(col("__graft_dv_path"), col("__graft_dv_idx"))))
-    val relOf = udf((p: String) => relFromUri(p))
     // SQL DELETE rule: NULL predicate = not deleted (coalesce false).
     // The predicate is user-facing — evaluate it on the LOGICAL view
     // (toLogical keeps the __graft position columns, which are not
     // mapped); positions are physical either way.
-    val matched = toLogical(snap, alive).filter(coalesce(predicate, lit(false)))
-      .select(relOf(col("__graft_dv_path")).as("f"), col("__graft_dv_idx").as("i"))
+    val matched = dvPositions(toLogical(snap, dvDetectionScan(s, dir, snap, scanFiles))
+      .filter(coalesce(predicate, lit(false))))
 
     val updates = writeDvSidecars(s, dir, snap, matched)
     if (updates.isEmpty) return 0L
@@ -4063,13 +4088,7 @@ object ManifestLake {
         case None => snap.files
       }
       if (candidates.isEmpty) return 0L
-      val raw = manifestScan(s, dir, candidates, snap.schema,
-          restorePartitions = true, snap.sizes)
-        .withColumn("__graft_dv_path", col("_metadata.file_path"))
-        .withColumn("__graft_dv_idx", col("_metadata.row_index"))
-      val alive = dvDeletedPredicate(s, dir, snap, candidates).fold(raw)(deleted =>
-        raw.filter(!deleted(col("__graft_dv_path"), col("__graft_dv_idx"))))
-      val relOf = udf((p: String) => relFromUri(p))
+      val alive = dvDetectionScan(s, dir, snap, candidates)
       val hits = (keyFrame, trackedKey, nonNullSample) match {
         case (None, Some(k), Some(sample)) =>
           alive.filter(col(k).isin(sample: _*))
@@ -4078,10 +4097,7 @@ object ManifestLake {
         case other => throw new IllegalStateException(
           s"unreachable detection shape: $other")
       }
-      val matched = hits
-        .select(relOf(col("__graft_dv_path")).as("f"),
-          col("__graft_dv_idx").as("i"))
-      val updates = writeDvSidecars(s, dir, snap, matched)
+      val updates = writeDvSidecars(s, dir, snap, dvPositions(hits))
       if (updates.isEmpty) return 0L
       require(updates.forall(u => snap.files.contains(u._1)),
         s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")
@@ -4187,24 +4203,18 @@ object ManifestLake {
       case None => selfCandidates(s, snap, predicate).getOrElse(snap.files)
     }
     if (scanFiles.isEmpty) return 0L
-    val raw = manifestScan(s, dir, scanFiles, snap.schema,
-        restorePartitions = true, snap.sizes)
-      .withColumn("__graft_dv_path", col("_metadata.file_path"))
-      .withColumn("__graft_dv_idx", col("_metadata.row_index"))
-    val alive = dvDeletedPredicate(s, dir, snap, scanFiles).fold(raw)(deleted =>
-      raw.filter(!deleted(col("__graft_dv_path"), col("__graft_dv_idx"))))
-    val relOf = udf((p: String) => relFromUri(p))
+    val alive = dvDetectionScan(s, dir, snap, scanFiles)
     // matched rows feed BOTH legs (positions -> sidecars, images ->
     // new files); persist so detection scans the candidates once.
     // The frame is LOGICALIZED first: predicate and assignments are
     // user-facing; the image converts back to physical before staging.
     val matchedRows = toLogical(snap, alive)
       .filter(coalesce(predicate, lit(false)))
-      .withColumn("__graft_dv_f", relOf(col("__graft_dv_path")))
+      .withColumn("__graft_dv_f", relOfUri(col(DvPathCol)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val updates = writeDvSidecars(s, dir, snap, matchedRows
-        .select(col("__graft_dv_f").as("f"), col("__graft_dv_idx").as("i")))
+        .select(col("__graft_dv_f").as("f"), col(DvIdxCol).as("i")))
       if (updates.isEmpty) return 0L
       require(updates.forall(u => snap.files.contains(u._1)),
         s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")
@@ -4220,7 +4230,7 @@ object ManifestLake {
       })
       // a type flip would silently corrupt every older file's
       // interpretation under the committed schema — refuse by name
-      val origTypes = raw.schema.fields.map(f => f.name -> f.dataType).toMap
+      val origTypes = alive.schema.fields.map(f => f.name -> f.dataType).toMap
       updatedImage.schema.fields.foreach { f =>
         origTypes.get(f.name).filter(_ != f.dataType).foreach { dt =>
           throw new IllegalStateException(
@@ -4380,9 +4390,7 @@ object ManifestLake {
     def rowsOf(files: Vector[String]): DataFrame = ordered(rawOf(files))
     val conf = s.sessionState.newHadoopConf()
     def rowsAt(positions: Map[String, Array[Long]]): DataFrame = {
-      val bc = s.sparkContext.broadcast(positions)
-      val hit = udf((p: String, i: Long) =>
-        bc.value.get(relFromUri(p)).exists(DvStore.contains(_, i)))
+      val hit = positionMember(s, positions)
       // _metadata must be referenced on the file-source relation
       // directly (a projection would sever it) — order AFTER filtering
       ordered(rawOf(positions.keys.toVector.sorted)
@@ -4684,14 +4692,7 @@ object ManifestLake {
       val updates: Seq[(String, String, Long)] =
         if (candidates.isEmpty) Vector.empty
         else {
-          val raw = manifestScan(s, dir, candidates, snap.schema,
-              restorePartitions = true, snap.sizes)
-            .withColumn("__graft_dv_path", col("_metadata.file_path"))
-            .withColumn("__graft_dv_idx", col("_metadata.row_index"))
-          val alive = dvDeletedPredicate(s, dir, snap, candidates).fold(raw)(
-            deleted => raw.filter(
-              !deleted(col("__graft_dv_path"), col("__graft_dv_idx"))))
-          val relOf = udf((p: String) => relFromUri(p))
+          val alive = dvDetectionScan(s, dir, snap, candidates)
           val hits = (keyFrame, trackedKey, sampled) match {
             case (None, Some(k), Some(sample)) =>
               // null-safe isin: a NULL key is a group — match it with
@@ -4711,10 +4712,7 @@ object ManifestLake {
             case other => throw new IllegalStateException(
               s"unreachable detection shape: $other")
           }
-          val matched = hits
-            .select(relOf(col("__graft_dv_path")).as("f"),
-              col("__graft_dv_idx").as("i"))
-          writeDvSidecars(s, dir, snap, matched)
+          writeDvSidecars(s, dir, snap, dvPositions(hits))
         }
       require(updates.forall(u => snap.files.contains(u._1)),
         s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")

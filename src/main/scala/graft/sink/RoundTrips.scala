@@ -1166,7 +1166,7 @@ object RoundTrips {
     * sidecar-bytes only), so sharing it across passes is sound. r15
     * drove this: driver med 53.6 s vs min 8.2 s on a row whose
     * isolated median is flat (~9 s at local[32], both 8g and 32g
-    * heaps, ProbeR16) — the corpus build inside the timed region was
+    * heaps, PERF_NOTE_r16.md) — the corpus build inside the timed region was
     * a 30-job ambient-stall antenna, not the operator.
     * Stored: (srcDir, builtAt, nowAt, viewTemplateDir). */
   private val ivmFixture =

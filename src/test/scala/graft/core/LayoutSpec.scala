@@ -2438,6 +2438,97 @@ class LayoutSpec extends SparkSpec {
     assert(seen.get() == 10, s"restart must drain ONLY the new commit, got ${seen.get()}")
   }
 
+  /** Rows of a DSv2 stream over `stream` drained once with
+    * Trigger.AvailableNow, or the failure that stopped it. */
+  private def drainAvailableNow(stream: org.apache.spark.sql.DataFrame)
+      : Either[Throwable, Vector[org.apache.spark.sql.Row]] = {
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]
+    val q = stream.writeStream
+      .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) => {
+        df.collect().foreach(rows.add); ()
+      })
+      .option("checkpointLocation", Files.createTempDirectory("mdrain_ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try {
+      assert(q.awaitTermination(120000), "AvailableNow must terminate")
+      Right(rows.asScala.toVector)
+    } catch { case e: org.apache.spark.sql.streaming.StreamingQueryException => Left(e) }
+    finally q.stop()
+  }
+
+  private def batchCdc(dir: String, to: Long): Vector[org.apache.spark.sql.Row] =
+    spark.read.format("graft").option("path", dir)
+      .option("startingVersion", "0").option("endingVersion", to.toString).load()
+      .select($"doc_id", $"source").collect().toVector
+
+  private def sortedIds(rows: Vector[org.apache.spark.sql.Row]): Vector[(Long, String)] =
+    rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("source"))).sorted
+
+  test("DSv2 streaming source: a window applies the deletion vectors committed inside it") {
+    val dir = Files.createTempDirectory("mwindv").resolve("lake").toString
+    def batch(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select($"id".as("doc_id"), lit("p0").as("source"))
+    ManifestLake.append(spark, dir, batch(0, 50), "source")          // v1
+    val stream = spark.readStream.format("graft").option("path", dir)
+      .option("skipChangeCommits", "true").load()                    // bound at v1
+    ManifestLake.append(spark, dir, batch(50, 80), "source")         // v2
+    ManifestLake.deleteWhereDv(spark, dir, $"doc_id" >= 60L)         // v3
+    val want = batchCdc(dir, 3L)
+    assert(want.length == 60)
+    val got = drainAvailableNow(stream.select($"doc_id", $"source"))
+      .fold(e => fail(e), identity)
+    assert(got.length == want.length,
+      s"the stream delivered ${got.length} rows, the batch CDC over (0, 3] ${want.length}")
+    assert(sortedIds(got) == sortedIds(want))
+  }
+
+  test("DSv2 streaming source ≡ batch CDC over one window of generated appends and DV deletes") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    trait Op
+    final case class Append(n: Int) extends Op
+    final case class DvDelete(mod: Int, rem: Int) extends Op
+    val opGen: Gen[Op] = Gen.frequency(
+      3 -> Gen.choose(1, 30).map(Append(_)),
+      2 -> (for { m <- Gen.choose(2, 5); r <- Gen.choose(0, 4) } yield DvDelete(m, r % m)))
+    val ops: Gen[List[Op]] = Gen.choose(1, 4).flatMap(Gen.listOfN(_, opGen))
+    val prop = Prop.forAllNoShrink(ops) { seq =>
+      val dir = Files.createTempDirectory("mwinprop").resolve("lake").toString
+      var next = 0L
+      def append(n: Int): Unit = {
+        ManifestLake.append(spark, dir, spark.range(next, next + n).select($"id".as("doc_id"),
+          concat(lit("p"), ($"id" % 2).cast("string")).as("source")), "source",
+          maxRecordsPerFile = 8L)
+        next += n
+      }
+      append(20)                                                     // v1
+      // both streams bind at v1; every generated commit lands inside
+      // the one window their AvailableNow drain covers
+      def load(skip: Boolean) = spark.readStream.format("graft").option("path", dir)
+        .option("skipChangeCommits", skip.toString).load().select($"doc_id", $"source")
+      val (strict, skipping) = (load(false), load(true))
+      seq.foreach {
+        case Append(n) => append(n)
+        case DvDelete(m, r) => ManifestLake.deleteWhereDv(spark, dir, $"doc_id" % m === r)
+      }
+      val end = ManifestLake.latestSnapshot(dir).get.version
+      val dvCommits = (2L to end).exists(v =>
+        ManifestLake.opOf(java.nio.file.Paths.get(dir), v).contains("delete-dv"))
+      val want = sortedIds(batchCdc(dir, end))
+      val skipOk = drainAvailableNow(skipping).map(sortedIds) == Right(want)
+      val strictOk = drainAvailableNow(strict) match {
+        case Left(e) => dvCommits && Iterator.iterate(e: Throwable)(_.getCause)
+          .takeWhile(_ != null).exists(t => Option(t.getMessage).exists(
+            _.contains("skipChangeCommits=false")))
+        case Right(rows) => !dvCommits && sortedIds(rows) == want
+      }
+      Prop(skipOk && strictOk) :| s"ops $seq (end v$end): skip $skipOk, strict $strictOk"
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6)
+      .withWorkers(1).withInitialSeed(org.scalacheck.rng.Seed(20261019L)), prop)
+    assert(r.passed, r.toString)
+  }
+
   test("$detail metadata table: one-row lake summary incl. bucket layout, version-addressable") {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     val dir = Files.createTempDirectory("mdetail").resolve("lake").toString

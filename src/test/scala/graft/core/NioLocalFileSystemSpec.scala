@@ -71,9 +71,8 @@ class NioLocalFileSystemSpec extends SparkSpec {
       Map("lake" -> census(root.resolve("lake")).filter(_._1 != "other"),
         "plain" -> census(root.resolve("plain")))
     }
-    // Both sides write through FRESH (uncached) instances: the cached
-    // `file:` instance is shared JVM-wide, and DvStore.write turns its
-    // checksum writing off for every later writer.
+    // Both sides write through FRESH (uncached) instances, so the
+    // stock side really runs `LocalFileSystem`.
     def uncached[A](impl: Option[String])(body: => A): A = {
       impl.foreach(spark.conf.set("fs.file.impl", _))
       spark.conf.set("fs.file.impl.disable.cache", "true")
@@ -92,5 +91,35 @@ class NioLocalFileSystemSpec extends SparkSpec {
     assert(viaNio("plain").contains("crc"), viaNio.toString)
     assert(viaNio("plain").contains("parquet") && viaNio("lake").contains("parquet"))
     assert(viaNio == viaStock)
+  }
+
+  test("a deletion-vector write leaves checksums on for the shared file: instance") {
+    spark.conf.set("spark.sql.catalog.graft_crc", classOf[GraftCatalog].getName)
+    val root = tmp("dv_crc")
+    val lake = root.resolve("lake")
+    val df = spark.range(0, 40).select($"id".as("doc_id"), lit("s0").as("source"),
+      ($"id" * 10).as("score"))
+    ManifestLake.append(spark, lake.toString, df, "source")
+    ManifestLake.deleteWhereDv(spark, lake.toString, $"doc_id" % 7 === 0)
+    // every later write below goes through the cached, process-wide
+    // `file:` instance the DV write used
+    assert(FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[NioLocalFileSystem])
+    def checksummed(p: Path): Boolean = Files.exists(p.resolveSibling(s".${p.getFileName}.crc"))
+    // a copy-on-write SQL UPDATE writes its rewritten files into the lake
+    val before = ManifestLake.latestSnapshot(lake.toString).get.files.toSet
+    spark.sql(s"UPDATE graft_crc.`$lake` SET score = -1 WHERE doc_id < 10")
+    val rewritten = ManifestLake.latestSnapshot(lake.toString).get.files.filterNot(before)
+    assert(rewritten.nonEmpty)
+    rewritten.foreach(f => assert(checksummed(lake.resolve(f)), s"no checksum for $f"))
+    // and a plain parquet write
+    df.write.parquet(root.resolve("plain").toString)
+    val plain = census(root.resolve("plain"))
+    assert(plain.contains("parquet") && plain.contains("crc"), plain.toString)
+    // the sidecar itself stays a single file: its format has its own magic
+    val dvs = Files.list(lake.resolve("_dv"))
+    try assert(dvs.iterator().asScala.map(_.getFileName.toString).forall(_.endsWith(".dv")))
+    finally dvs.close()
+    assert(ManifestLake.read(spark, lake.toString).filter($"score" === -1).count() == 8L)
   }
 }

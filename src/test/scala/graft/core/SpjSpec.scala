@@ -246,6 +246,11 @@ class SpjSpec extends SparkSpec {
       // that key would land in the wrong partition and the match lost
       assert(df.count() == 500)
       assert(df.agg(sum($"w")).head().getLong(0) == (0L until 500L).map(_ * 7).sum)
+      // baseline: without storage partitioning both sides shuffle
+      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
+      val offN = shuffles(spark.sql(s"SELECT l.doc_id, l.v, d.w FROM graft_shuf.`$lake` l " +
+        "JOIN spjb_delta d ON l.doc_id = d.doc_id"))
+      assert(offN >= 2, s"baseline should shuffle both sides, saw $offN exchanges")
     } finally saved match {
       case Some(v) => spark.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled", v)
       case None => spark.conf.unset("spark.sql.sources.v2.bucketing.shuffle.enabled")
