@@ -678,16 +678,6 @@ object Plans {
         |(count(ctx) = Σ_w count(ctx++w), exact for MLE), and the
         |scoring tail is q47's broadcast pass, so the oracle replays
         |the whole trip relationally.""".stripMargin,
-    "q135_hnsw_ann" ->
-      """The reference's actual index structure (pgvector HNSW),
-        |distributed: per-coarse-bucket deterministic graphs built one
-        |task per bucket and serialized to a bucket-partitioned
-        |adjacency lake; the serve plan partition-prunes to the nprobe
-        |probed buckets (isin on the bucket key), rebuilds each graph
-        |in its task, beam-searches, and merges top-k under one
-        |(sim, id) window over |queries| x nprobe x k rows. A BUCKET must
-        |fit one task — bucket count grows with the corpus, so search
-        |cost is nprobe graphs x O(ef·M·d), corpus-size-free.""".stripMargin,
     "q136_hnsw_delta" ->
       """Bucket-granular incremental index update: the 1% delta is
         |assigned by the shared broadcast-argmax pass, dirty buckets
@@ -696,8 +686,10 @@ object Plans {
         |construction is deterministic the result is byte-identical to
         |a from-scratch build (spec-asserted). Update cost follows the
         |dirty buckets' sizes, never corpus size. The emitted ledger is
-        |the relational (oracled) surface; the graph bytes are q135's
-        |rows-only caveat.""".stripMargin,
+        |the relational (oracled) surface; the graph bytes are not
+        |oracled. A BUCKET must fit one task — bucket count grows with
+        |the corpus, so search cost is nprobe graphs x O(ef·M·d),
+        |corpus-size-free.""".stripMargin,
     "q137_leakage_safe_split" ->
       """The constructive fix for q92's audit: split unit = near-dup
         |component, so no near-dup pair can straddle train/eval by

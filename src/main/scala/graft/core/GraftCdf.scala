@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DSv2 surface for the change data feed ([[ManifestLake.readChangeFeed]]
-  * is the Scala twin — ONE op-dispatch contract, asserted against each
-  * other in CdfSpec):
+/** The change data feed's one read path. [[ManifestLake.readChangeFeed]]
+  * is a load of the batch face below, and the view maintainers tail the
+  * streaming face:
   *
   *   - batch: `spark.read.format("graft").option("readChangeFeed","true")
   *     .option("startingVersion", f).option("endingVersion", t)` — the
@@ -33,7 +33,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * parent sidecar PATHS (readers load the delete-proportional varint
   * blobs and keep positions in the diff). Nothing scales with the
   * lake. Splits and readers come from [[GraftRead]], the planner the
-  * plain scan uses. */
+  * plain scan uses.
+  *
+  * Column mapping: the feed serves the window-end LOGICAL schema
+  * (renamed columns under their logical names, dropped columns hidden,
+  * nested drops clipped); the parquet readers request each logical
+  * field under its physical name, exactly as [[GraftScan]] does. */
 private[core] object GraftCdf {
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
@@ -50,10 +55,9 @@ private[core] object GraftCdf {
       // nullable: pre-`#ts:` manifests have no commit wall time
       StructField(CommitTimestampCol, TimestampType, nullable = true))
 
-  /** (changeType, files, curDv, prevDv) legs of one commit — the same
-    * dispatch [[ManifestLake.readChangeFeed]] runs, factored so the
-    * DSv2 planner and the DataFrame builder cannot drift on WHAT
-    * changed (they differ only in how rows are materialized). */
+  /** (changeType, files, curDv, prevDv) legs of one commit: WHAT
+    * changed, the one dispatch the batch and streaming feeds plan
+    * their splits from. */
   private[core] def legsOf(dir: String, v: Long,
                            prev: ManifestLake.Snapshot,
                            cur: ManifestLake.Snapshot)
@@ -138,10 +142,10 @@ private[core] final class CdfFilePartition(
 private[core] final case class GraftCdfTable(dir: String,
                                              window: Option[(Long, Long)])
     extends Table with SupportsRead {
-  // a batch window binds the WINDOW-END snapshot (so the schema, and
-  // with it column order, matches readChangeFeed's — a post-window
-  // ADD COLUMNS must not leak into an older window's feed); streams
-  // bind latest, their windows only ever extend forward from it
+  // a batch window binds the WINDOW-END snapshot: its schema and
+  // column mapping govern the whole window (a post-window ADD COLUMNS
+  // must not leak into an older window's feed); streams bind latest,
+  // their windows only ever extend forward from it
   private[core] val snap: ManifestLake.Snapshot = window match {
     case Some((_, to)) => ManifestLake.snapshotAt(dir, to).getOrElse(
       throw new IllegalStateException(
@@ -150,29 +154,19 @@ private[core] final case class GraftCdfTable(dir: String,
     case None => ManifestLake.latestSnapshot(dir).getOrElse(
       throw new IllegalStateException(s"no committed manifest in $dir"))
   }
+  /** The committed PHYSICAL schema — what the files carry. */
   private[core] val lakeSchema: StructType =
     snap.schema.getOrElse(throw new IllegalStateException(
       s"lake $dir has no committed schema — the change feed requires one"))
+  /** The user-facing columns the feed serves, in committed order. */
+  private[core] val logicalSchema: StructType = snap.logicalSchema.get
   private[core] val partitionCol: Option[String] =
     snap.files.headOption.map(_.takeWhile(_ != '='))
       .filter(lakeSchema.fieldNames.contains)
       .orElse(snap.declaredPartitionCol)
 
   override def name(): String = s"graft-cdf:$dir"
-  // column mapping: the feed serves RENAMED columns under their
-  // logical names (a pure rename of this positional schema). DROPPED
-  // columns refuse on the DSv2 face — the readers materialize rows
-  // positionally under the full physical schema, and silently
-  // SERVING a dropped column would leak hidden bytes. The Scala
-  // [[ManifestLake.readChangeFeed]] twin projects them away.
-  require(snap.droppedCols.isEmpty && snap.nestedDrops.isEmpty,
-    s"the DSv2 change feed over $dir cannot serve a lake with DROPPED " +
-      "columns (top-level or nested) — use ManifestLake.readChangeFeed, " +
-      "which hides them")
-  override val schema: StructType = GraftCdf.cdfSchema(StructType(
-    lakeSchema.fields.map(f => f.copy(name = snap.logicalName(f.name),
-      dataType = ManifestLake.nestedLogicalType(snap, f.dataType,
-        Seq(f.name))))))
+  override val schema: StructType = GraftCdf.cdfSchema(logicalSchema)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
@@ -243,8 +237,7 @@ private[graft] final case class GraftCdfScan(table: GraftCdfTable,
     var idx = -1
     def nextIdx(): Int = { idx += 1; idx }
     // carry cur → prev so each version's manifest resolves ONCE per
-    // window, not twice (chains re-resolve per parse — see the Scala
-    // twin's identical walk)
+    // window, not twice (chains re-resolve per parse)
     var prev: ManifestLake.Snapshot =
       if (from == 0) ManifestLake.Snapshot(0L, Vector.empty) else snapAt(from)
     ((from + 1) to to).toArray.flatMap { v =>
@@ -278,27 +271,42 @@ private[graft] final case class GraftCdfScan(table: GraftCdfTable,
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.getActiveSession.getOrElse(
       throw new IllegalStateException("no active SparkSession"))
-    val part = StructType(partitionFields)
-    val dataSchema = StructType(
+    val snap = table.snap
+    val partLogical = table.partitionCol.map(snap.logicalName)
+    val (partFields, dataFields) =
+      table.logicalSchema.fields.partition(f => partLogical.contains(f.name))
+    // the parquet layer requests PHYSICAL names at every nesting level
+    // (rows are positional, so the rename is free; a dropped column is
+    // never requested, a nested drop is clipped)
+    def physical(fs: Array[StructField]): StructType =
+      StructType(fs.map(ManifestLake.physReadField(snap, _)))
+    val part = physical(partFields)
+    val data = physical(dataFields)
+    val withIdx = StructType(data.fields :+ GraftRead.RowIndexField)
+    // what the files carry: the committed schema minus the partition
+    // column (evolution-era files null-fill)
+    val fileSchema = StructType(
       table.lakeSchema.fields.filterNot(f => table.partitionCol.contains(f.name)))
-    val withIdx = StructType(dataSchema.fields :+ GraftRead.RowIndexField)
     // commit-time change sidecars: unpartitioned, full lake columns as
     // data plus the STORED change type — a third factory with no
     // partition schema (the data legs' factories would interleave the
     // partition fields this leg doesn't have)
-    val cdcSchema = StructType(table.lakeSchema.fields :+
-      StructField(GraftCdf.ChangeTypeCol, StringType, nullable = false))
+    val changeType = StructField(GraftCdf.ChangeTypeCol, StringType, nullable = false)
     new CdfReaderFactory(
-      plain = GraftRead.parquetFactory(spark, dataSchema, dataSchema, part, Array.empty),
-      withIdx = GraftRead.parquetFactory(spark, dataSchema, withIdx, part, Array.empty),
-      cdc = GraftRead.parquetFactory(spark, cdcSchema, cdcSchema, StructType(Nil), Array.empty),
+      plain = GraftRead.parquetFactory(spark, fileSchema, data, part, Array.empty),
+      withIdx = GraftRead.parquetFactory(spark, fileSchema, withIdx, part, Array.empty),
+      cdc = GraftRead.parquetFactory(spark, StructType(table.lakeSchema.fields :+ changeType),
+        StructType(physical(table.logicalSchema.fields).fields :+ changeType),
+        StructType(Nil), Array.empty),
       lakeDir = table.dir,
       conf = GraftRead.sidecarConf(spark),
-      // physical layouts the factories emit (requested ++ part)
-      plainPhysical = StructType(dataSchema.fields ++ part),
-      idxPhysical = StructType(withIdx.fields ++ part),
-      cdcPhysical = cdcSchema,
-      idxPos = dataSchema.length,
+      // the columns each factory emits (requested ++ part), under the
+      // output's logical names
+      plainLayout = (dataFields ++ partFields).map(_.name),
+      idxLayout = (dataFields.map(_.name) :+ GraftRead.RowIndexField.name) ++
+        partFields.map(_.name),
+      cdcLayout = table.logicalSchema.fieldNames :+ GraftCdf.ChangeTypeCol,
+      idxPos = dataFields.length,
       out = readSchema())
   }
 }
@@ -317,30 +325,31 @@ private[core] final class CdfReaderFactory(
     cdc: PartitionReaderFactory,
     lakeDir: String,
     conf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
-    plainPhysical: StructType, idxPhysical: StructType,
-    cdcPhysical: StructType, idxPos: Int,
+    plainLayout: Array[String], idxLayout: Array[String],
+    cdcLayout: Array[String], idxPos: Int,
     out: StructType)
     extends PartitionReaderFactory {
   import org.apache.spark.sql.connector.read.PartitionReader
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
 
-  private def projection(physical: StructType): UnsafeProjection = {
-    // joined row = physical fields then [changeType, commitVersion,
-    // commitTimestamp]; a physical schema that CARRIES the change type
-    // (cdc sidecars) binds it from the file instead of the constant
-    val byName = physical.fieldNames.zipWithIndex.toMap
-    val n = physical.length
+  /** Binds each output column to its position in `layout`, the row a
+    * factory emits (named as the output is): joined row = that row
+    * then [changeType, commitVersion, commitTimestamp]; a layout that
+    * CARRIES the change type (cdc sidecars) binds it from the file
+    * instead of the constant. */
+  private def projection(layout: Array[String]): UnsafeProjection = {
+    val n = layout.length
     UnsafeProjection.create(out.fields.map { f =>
-      f.name match {
-        case GraftCdf.ChangeTypeCol if !byName.contains(GraftCdf.ChangeTypeCol) =>
-          BoundReference(n, StringType, nullable = false)
-        case GraftCdf.CommitVersionCol => BoundReference(n + 1, LongType, nullable = false)
-        case GraftCdf.CommitTimestampCol =>
-          BoundReference(n + 2, TimestampType, nullable = true)
-        case other => BoundReference(byName(other),
-          physical(byName(other)).dataType, physical(byName(other)).nullable)
+      val i = layout.indexOf(f.name) match {
+        case -1 => f.name match {
+          case GraftCdf.ChangeTypeCol      => n
+          case GraftCdf.CommitVersionCol   => n + 1
+          case GraftCdf.CommitTimestampCol => n + 2
+        }
+        case at => at
       }
+      BoundReference(i, f.dataType, f.nullable)
     }.toIndexedSeq)
   }
 
@@ -351,7 +360,7 @@ private[core] final class CdfReaderFactory(
       if (c.tsMicros == null) null else c.tsMicros.longValue()))
     val joined = new JoinedRow
     if (c.dvByRel.nonEmpty) {
-      val proj = projection(idxPhysical) // idx never referenced by `out`
+      val proj = projection(idxLayout) // idx never referenced by `out`
       new DvChainReader(c, withIdx, idxPos, pf => {
         val (dvCur, dvPrev) = c.dvByRel(ManifestLake.relFromUri(pf.filePath.toString))
         val cur = DvStore.read(lakeDir, dvCur, conf.value.value)
@@ -362,8 +371,8 @@ private[core] final class CdfReaderFactory(
     } else {
       val (inner, proj) =
         if (c.changeType == GraftCdf.CdcLegType)
-          (cdc.createReader(partition), projection(cdcPhysical))
-        else (plain.createReader(partition), projection(plainPhysical))
+          (cdc.createReader(partition), projection(cdcLayout))
+        else (plain.createReader(partition), projection(plainLayout))
       new PartitionReader[InternalRow] {
         override def next(): Boolean = inner.next()
         override def get(): InternalRow = proj(joined(inner.get(), consts))

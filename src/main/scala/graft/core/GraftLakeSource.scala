@@ -34,8 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `versionAsOf` — time travel: read the lake as of manifest version N
   *  - `startingVersion`/`endingVersion` — CDC window: rows ADDED by
   *    append commits in (starting, ending], compaction/delete commits
-  *    invisible — [[ManifestLake.changedFiles]], the same rule
-  *    `readChanges` uses, so the two surfaces cannot drift
+  *    invisible — [[ManifestLake.changedFiles]]; `readChanges` is a
+  *    load of this window
   *  - `startingTimestamp`/`endingTimestamp` — the same windows
   *    addressed by commit wall time (epoch millis or ISO-8601): start
   *    = first commit at-or-after the instant (inclusive), end = last
@@ -1423,7 +1423,7 @@ private[core] final class KeyedFilePartition(
   * single-file inner reader per file so row indexes stay file-absolute.
   * Before, every DV'd file was its own task: a MoR delete touching all
   * files of a small-file lake made every later scan plan one task per
-  * file (the CDF twin measured this as 242-task KB-window stages). */
+  * file (the r17 q184 census measured 242-task KB-window stages). */
 private[core] sealed trait HasPackedDv {
   def dvByRel: Map[String, String]
 }

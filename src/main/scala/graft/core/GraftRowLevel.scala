@@ -164,7 +164,7 @@ private[core] final class GraftReplaceBatchWrite(
     val root = Paths.get(table.dir)
     messages.iterator.filter(_ != null)
       .map(_.asInstanceOf[GraftWriteCommit]).flatMap(_.files)
-      .foreach(f => Files.deleteIfExists(root.resolve(f)))
+      .foreach(f => ManifestLake.deleteLakeFile(root.resolve(f)))
   }
 }
 
@@ -267,7 +267,7 @@ private[core] final class GraftDataWriter(
       try w.close() catch { case _: Throwable => () }
     }
     val root = Paths.get(dir)
-    written.foreach(f => Files.deleteIfExists(root.resolve(f)))
+    written.foreach(f => ManifestLake.deleteLakeFile(root.resolve(f)))
   }
 
   override def close(): Unit = ()

@@ -3581,21 +3581,12 @@ object ManifestLake {
     if (dvd.isEmpty) None
     else {
       val conf = s.sessionState.newHadoopConf()
-      Some(positionMember(s,
-        parMapMeta(dvd)(f => f -> DvStore.read(dir, snap.dvs(f).path, conf)).toMap))
+      val bc = s.sparkContext.broadcast(
+        parMapMeta(dvd)(f => f -> DvStore.read(dir, snap.dvs(f).path, conf)).toMap)
+      val member = udf((path: String, idx: Long) =>
+        bc.value.get(relFromUri(path)).exists(DvStore.contains(_, idx)))
+      Some((p, i) => member(p, i))
     }
-  }
-
-  /** `(file_path, row_index) → is the row one of positions`, as a
-    * Column function over ONE broadcast of the position arrays (keyed
-    * by lake-relative file) — the DV filter and the change feed's
-    * position legs. */
-  private def positionMember(s: SparkSession, positions: Map[String, Array[Long]])
-      : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column = {
-    val bc = s.sparkContext.broadcast(positions)
-    val member = udf((path: String, idx: Long) =>
-      bc.value.get(relFromUri(path)).exists(DvStore.contains(_, idx)))
-    (p, i) => member(p, i)
   }
 
   private val DvPathCol = "__graft_dv_path"
@@ -4300,29 +4291,17 @@ object ManifestLake {
     * entirely (they rewrite bytes, not content — a CDC reader that
     * re-emitted compacted rows would double-count every record the
     * optimizer touched). Cost scales with the delta, never the lake.
-    * Requires the range's manifests to still exist (vacuum retires
-    * them past the grace window — run CDC inside it, or raise
-    * `keepVersions`). */
+    * A load of the SQL surface's CDC window ([[GraftLake]]'s
+    * `startingVersion`/`endingVersion`): the files come from
+    * [[changedFiles]], read under the window-end snapshot's schema,
+    * column mapping and deletion vectors. Requires the range's
+    * manifests to still exist (vacuum retires them past the grace
+    * window — run CDC inside it, or raise `keepVersions`). */
   def readChanges(s: SparkSession, dir: String,
-                  fromExclusive: Long, toInclusive: Long): DataFrame = {
-    val added = changedFiles(dir, fromExclusive, toInclusive)
-    def snap(v: Long): Snapshot = snapshotAt(dir, v).getOrElse(
-      throw new IllegalStateException(s"manifest v$v of $dir is missing"))
-    if (added.isEmpty) read(s, dir).filter(lit(false))
-    else {
-      // read under the window-end's committed schema so deltas spanning
-      // a column addition present uniformly (older files null-fill);
-      // the window-end snapshot's column mapping applies, like read().
-      // Sizes merge across the window's snapshots (cached parses): a
-      // file added mid-window and removed by the end still plans from
-      // the manifest that committed it.
-      val end = snap(toInclusive)
-      val sizes = ((math.max(fromExclusive, 1L)) to toInclusive)
-        .foldLeft(Map.empty[String, FileSize])(_ ++ snap(_).sizes)
-      toLogical(end, manifestScan(s, dir, added,
-        end.schema, restorePartitions = true, sizes))
-    }
-  }
+                  fromExclusive: Long, toInclusive: Long): DataFrame =
+    s.read.format("graft").option("path", dir)
+      .option("startingVersion", fromExclusive)
+      .option("endingVersion", toInclusive).load()
 
   /** Change DATA feed — Delta's `readChangeFeed`, for the commits
     * whose row-level change record the lake ALREADY HAS exactly, so no
@@ -4356,108 +4335,21 @@ object ManifestLake {
     * Output columns: the lake's (window-end schema, older files
     * null-fill) + `_change_type` + `_commit_version` +
     * `_commit_timestamp` (the commit's `#ts:` wall time; null only on
-    * pre-ts manifests). Cost ∝ changed rows: sidecar diffs are
-    * driver-side byte-sized reads, position filtering broadcasts only
-    * the diff, and only files holding changes are opened. Requires the
-    * window's manifests (and for preimages, the pre-rewrite data
-    * files) to still exist — run CDF inside the retention window,
-    * exactly like [[readChanges]]. */
+    * pre-ts manifests), under the window-end snapshot's column
+    * mapping. A load of the DSv2 feed ([[GraftCdfTable]]), so a refusal
+    * raises when the feed is planned. Cost ∝ changed rows: splits
+    * carry only changed files, and position legs read their sidecar
+    * diffs on the executors. Requires the window's manifests (and for
+    * preimages, the pre-rewrite data files) to still exist — run CDF
+    * inside the retention window, exactly like [[readChanges]]. */
   def readChangeFeed(s: SparkSession, dir: String,
                      fromExclusive: Long, toInclusive: Long): DataFrame = {
     require(fromExclusive <= toInclusive,
       s"bad version range ($fromExclusive, $toInclusive]")
-    def snap(v: Long): Snapshot = snapshotAt(dir, v).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v of $dir is missing (retired by vacuum?) — " +
-          "the change feed must run inside the retention window"))
-    val endSchema = snap(toInclusive).schema
-    // per-file sizes merged across the WINDOW's snapshots (the parses
-    // are cached — the legs loop below walks the same versions): a
-    // preimage leg reads files the end snapshot no longer lists, so
-    // the end snapshot's sizes alone would under-cover
-    val windowSizes: Map[String, FileSize] =
-      ((math.max(fromExclusive, 1L)) to toInclusive)
-        .foldLeft(Map.empty[String, FileSize])(_ ++ snap(_).sizes)
-    // present the COMMITTED column order (basePath restores the
-    // partition column, but parquet appends it last) — the same order
-    // the DSv2 change-feed table declares, so the two faces agree
-    // column-for-column, not just row-for-row
-    def rawOf(files: Vector[String]): DataFrame =
-      manifestScan(s, dir, files, endSchema, restorePartitions = true,
-        windowSizes)
-    def ordered(df: DataFrame): DataFrame =
-      endSchema.fold(df)(sc => df.select(sc.fieldNames.toIndexedSeq.map(col): _*))
-    def rowsOf(files: Vector[String]): DataFrame = ordered(rawOf(files))
-    val conf = s.sessionState.newHadoopConf()
-    def rowsAt(positions: Map[String, Array[Long]]): DataFrame = {
-      val hit = positionMember(s, positions)
-      // _metadata must be referenced on the file-source relation
-      // directly (a projection would sever it) — order AFTER filtering
-      ordered(rawOf(positions.keys.toVector.sorted)
-        .withColumn("__graft_cdf_p", col("_metadata.file_path"))
-        .withColumn("__graft_cdf_i", col("_metadata.row_index"))
-        .filter(hit(col("__graft_cdf_p"), col("__graft_cdf_i")))
-        .drop("__graft_cdf_p", "__graft_cdf_i"))
-    }
-    // WHAT changed per commit is [[GraftCdf.legsOf]]'s single dispatch
-    // — shared with the DSv2 batch and streaming change-feed faces, so
-    // the three materializations can never disagree on the rows
-    // commit-time sidecars (`_cdf/`, CDF-enabled COW DML) carry the
-    // change type as a STORED column and the partition column as plain
-    // data — read them under the window-end schema so post-window ADD
-    // COLUMNS null-fill like every other leg
-    def cdcRowsOf(files: Vector[String]): DataFrame = {
-      val sc = endSchema.getOrElse(throw new IllegalStateException(
-        s"lake $dir has change sidecars but no committed schema"))
-      val full = org.apache.spark.sql.types.StructType(sc.fields :+
-        org.apache.spark.sql.types.StructField(CdfTypeCol,
-          org.apache.spark.sql.types.StringType, nullable = false))
-      manifestScan(s, dir, files, Some(full), restorePartitions = false,
-          windowSizes)
-        .select((sc.fieldNames :+ CdfTypeCol).toIndexedSeq.map(col): _*)
-    }
-    def tsCol(ms: Option[Long]): org.apache.spark.sql.Column = ms match {
-      case Some(m) => lit(new java.sql.Timestamp(m))
-      case None    => lit(null).cast(org.apache.spark.sql.types.TimestampType)
-    }
-    var prevSnap: Snapshot =
-      if (fromExclusive == 0) Snapshot(0L, Vector.empty) else snap(fromExclusive)
-    val legs: Seq[DataFrame] =
-      ((fromExclusive + 1) to toInclusive).flatMap { v =>
-        val cur = snap(v)
-        val prev = prevSnap
-        prevSnap = cur
-        GraftCdf.legsOf(dir, v, prev, cur).flatMap { case (t, files, dvs) =>
-          val base: Option[DataFrame] =
-            if (t == GraftCdf.CdcLegType) Some(cdcRowsOf(files))
-            else if (dvs.isEmpty)
-              Some(rowsOf(files).withColumn("_change_type", lit(t)))
-            else {
-              val diff = dvs.flatMap { case (f, (c, p)) =>
-                val now = DvStore.read(dir, c, conf)
-                val before = p.map(DvStore.read(dir, _, conf))
-                  .getOrElse(Array.empty[Long])
-                val fresh = now.filterNot(DvStore.contains(before, _))
-                if (fresh.isEmpty) None else Some(f -> fresh)
-              }
-              if (diff.isEmpty) None
-              else Some(rowsAt(diff).withColumn("_change_type", lit(t)))
-            }
-          base.map(_.withColumn("_commit_version", lit(v))
-            .withColumn("_commit_timestamp", tsCol(cur.tsMillis)))
-        }
-      }
-    legs.reduceOption(_ unionByName _)
-      // window-end column mapping, like read(): renamed columns serve
-      // logical names, dropped ones hide; the _change_type/_commit_*
-      // columns are never mapped (empty fallback: read() is already
-      // logical)
-      .map(toLogical(snap(toInclusive), _))
-      .getOrElse(
-        read(s, dir, Some(snap(toInclusive))).filter(lit(false))
-          .withColumn("_change_type", lit(""))
-          .withColumn("_commit_version", lit(0L))
-          .withColumn("_commit_timestamp", tsCol(None)))
+    s.read.format("graft").option("path", dir)
+      .option("readChangeFeed", "true")
+      .option("startingVersion", fromExclusive)
+      .option("endingVersion", toInclusive).load()
   }
 
   /** SCD TYPE-2 dimension materialization from the change feed: turn
@@ -6451,6 +6343,16 @@ object ManifestLake {
     * value is a no-op. */
   @volatile private[core] var beforeVacuumPhase: String => Unit = _ => ()
 
+  /** Deletes a lake file and its Hadoop checksum twin
+    * (`.<name>.crc`, written beside every file a Hadoop writer puts
+    * into the lake) — a reclaimed or aborted file leaves nothing
+    * behind. */
+  private[core] def deleteLakeFile(p: Path): Unit = {
+    Files.deleteIfExists(p)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    ()
+  }
+
   /** `maintainerStaleMillis` — the operator's escape hatch from an
     * ABANDONED maintainer (see [[registerMaintainer]]): 0 (default)
     * honors every registered record — protective, a paused view is
@@ -6589,6 +6491,19 @@ object ManifestLake {
       try Files.getLastModifiedTime(p).toMillis <= cutoff
       catch { case _: java.io.IOException => false }
     var reclaimed = 0L
+    // one lake subdirectory's sweep: its `ext` files that no protected
+    // version references and that are past the grace cutoff
+    def sweep(d: Path, ext: String, keep: Set[String], what: String): Unit = {
+      requireLeaseFresh(what)
+      val name = d.getFileName.toString
+      val fs = Files.list(d)
+      try fs.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(ext))
+        .filterNot(f => keep.contains(s"$name/${f.getFileName}"))
+        .filter(oldEnough)
+        .foreach { f => if (!dryRun) deleteLakeFile(f); reclaimed += 1 }
+      finally fs.close()
+    }
     requireLeaseFresh("data-file sweep")
     val top = Files.list(root)
     try top.iterator().asScala.foreach { p =>
@@ -6601,34 +6516,12 @@ object ManifestLake {
           }
           reclaimed += 1
         }
-      } else if (Files.isDirectory(p) && name.contains("=")) {
-        requireLeaseFresh(s"data-file sweep ($name)")
-        val fs = Files.list(p)
-        try fs.iterator().asScala
-          .filter(f => f.getFileName.toString.endsWith(".parquet"))
-          .filterNot(f => referenced.contains(s"$name/${f.getFileName}"))
-          .filter(oldEnough)
-          .foreach { f => if (!dryRun) { Files.deleteIfExists(f); () }; reclaimed += 1 }
-        finally fs.close()
-      } else if (Files.isDirectory(p) && name == DvStore.DvDir) {
-        requireLeaseFresh("DV sweep")
-        val fs = Files.list(p)
-        try fs.iterator().asScala
-          .filter(f => f.getFileName.toString.endsWith(".dv"))
-          .filterNot(f => referencedDvs.contains(s"$name/${f.getFileName}"))
-          .filter(oldEnough)
-          .foreach { f => if (!dryRun) { Files.deleteIfExists(f); () }; reclaimed += 1 }
-        finally fs.close()
-      } else if (Files.isDirectory(p) && name == CdfDir) {
-        requireLeaseFresh("CDF sweep")
-        val fs = Files.list(p)
-        try fs.iterator().asScala
-          .filter(f => f.getFileName.toString.endsWith(".parquet"))
-          .filterNot(f => referencedCdf.contains(s"$name/${f.getFileName}"))
-          .filter(oldEnough)
-          .foreach { f => if (!dryRun) { Files.deleteIfExists(f); () }; reclaimed += 1 }
-        finally fs.close()
-      }
+      } else if (Files.isDirectory(p) && name.contains("="))
+        sweep(p, ".parquet", referenced, s"data-file sweep ($name)")
+      else if (Files.isDirectory(p) && name == DvStore.DvDir)
+        sweep(p, ".dv", referencedDvs, "DV sweep")
+      else if (Files.isDirectory(p) && name == CdfDir)
+        sweep(p, ".parquet", referencedCdf, "CDF sweep")
     } finally top.close()
     // Retire manifests that fell out of BOTH retention contracts (their
     // files are already unprotected, so the history they describe is

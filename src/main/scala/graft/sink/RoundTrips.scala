@@ -983,8 +983,8 @@ object RoundTrips {
     * feed then aggregates per (change_type, source) and must hash-match
     * DuckDB's recompute of each leg from raw parquet. At 100 TB this is
     * the GDPR/downstream-index propagation primitive: feed cost ∝
-    * changed rows (driver-side sidecar diffs + opens of only the files
-    * holding changes), never corpus size. */
+    * changed rows (sidecar diffs read on the executors + opens of only
+    * the files holding changes), never corpus size. */
   /** q172's corpus template (r16, the q173/q174/q186 restructure
     * applied here before the row graduates to the watch list — its
     * r15 driver med/min was 10.6/5.8): the base lake is scaffolding;

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The change feed's DSv2 faces — batch options and the streaming
-  * source — pinned against [[ManifestLake.readChangeFeed]] (the Scala
-  * twin) and against the model: the three materializations share one
-  * op-dispatch ([[GraftCdf.legsOf]]), so rows may never differ. */
+/** The change feed's faces — [[ManifestLake.readChangeFeed]], the
+  * batch options and the streaming source — pinned against the model
+  * and against the reconstruction law (folding the feed from v0
+  * rebuilds [[ManifestLake.read]]'s multiset, a read that shares no
+  * code with the feed's scan). All faces plan from one scan
+  * ([[GraftCdfScan]]) over one op-dispatch ([[GraftCdf.legsOf]]). */
 class CdfSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,6 +25,40 @@ class CdfSpec extends SparkSpec {
         ($"id" * 10).as("n_chars"))
     ManifestLake.append(spark, dir, df, "source",
       maxRecordsPerFile = 32L, statsCols = Seq("doc_id"))
+  }
+
+  /** The reconstruction law over a `mkLake`-shaped lake: the feed
+    * folded from v0 (insert/postimage add, delete/preimage remove)
+    * must equal the table's exact multiset as [[ManifestLake.read]]
+    * serves it. */
+  private def assertFeedRebuildsTable(dir: String): Unit = {
+    type K = (Long, String, Long)
+    val v = ManifestLake.latestSnapshot(dir).get.version
+    val folded = scala.collection.mutable.Map.empty[K, Int].withDefaultValue(0)
+    ManifestLake.readChangeFeed(spark, dir, 0L, v)
+      .select($"doc_id", $"source", $"n_chars", $"_change_type", $"_commit_version")
+      .collect()
+      .sortBy(_.getLong(4)) // fold in commit order; within-version order is multiset-neutral
+      .foreach { r =>
+        val k: K = (r.getLong(0), r.getString(1), r.getLong(2))
+        r.getString(3) match {
+          case "insert" | "update_postimage" => folded(k) += 1
+          case "delete" | "update_preimage" =>
+            assert(folded(k) > 0, s"feed removes a row the fold doesn't hold: $k")
+            folded(k) -= 1
+          case other => fail(s"unexpected change type $other")
+        }
+      }
+    val table = ManifestLake.read(spark, dir)
+      .select($"doc_id", $"source", $"n_chars").collect()
+      .groupBy(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .view.mapValues(_.length).toMap
+    val rebuilt = folded.filter(_._2 > 0).toMap
+    assert(rebuilt == table,
+      s"fold-only=${(rebuilt.toSet -- table.toSet).take(3)} " +
+        s"table-only=${(table.toSet -- rebuilt.toSet).take(3)}")
+    assert(table.nonEmpty && table.values.sum.toLong ==
+      ManifestLake.read(spark, dir).count())
   }
 
   test("DSv2 batch change feed ≡ the Scala readChangeFeed, row for row") {
@@ -42,18 +78,20 @@ class CdfSpec extends SparkSpec {
       .option("readChangeFeed", "true")
       .option("startingVersion", "0").option("endingVersion", v.toString)
       .load()
-    val twin = ManifestLake.readChangeFeed(spark, dir, 0L, v)
-    assert(dsv2.schema.fieldNames.toSeq == twin.schema.fieldNames.toSeq)
+    val scalaFeed = ManifestLake.readChangeFeed(spark, dir, 0L, v)
+    assert(dsv2.schema.fieldNames.toSeq == scalaFeed.schema.fieldNames.toSeq)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String, Long, String, Long)] =
       df.select($"doc_id", $"source", $"n_chars", $"_change_type",
         $"_commit_version")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           r.getString(3), r.getLong(4))).toSet
-    val a = rows(dsv2); val b = rows(twin)
-    assert(a == b, s"dsv2-only=${(a -- b).take(3)} twin-only=${(b -- a).take(3)}")
+    val a = rows(dsv2); val b = rows(scalaFeed)
+    assert(a == b, s"dsv2-only=${(a -- b).take(3)} scalaFeed-only=${(b -- a).take(3)}")
     assert(a.count(_._4 == "insert") == 210 && a.count(_._4 == "delete") == 20 &&
       a.count(_._4 == "update_preimage") == 1 &&
       a.count(_._4 == "update_postimage") == 1)
+    // a reference outside the feed's own scan: the V1 read
+    assertFeedRebuildsTable(dir)
 
     // sub-window: only the delete commit
     val w = spark.read.format("graft").option("path", dir)
@@ -199,21 +237,24 @@ class CdfSpec extends SparkSpec {
     val dsv2 = spark.read.format("graft").option("path", cow)
       .option("readChangeFeed", "true")
       .option("startingVersion", "0").option("endingVersion", v.toString).load()
-    val twin = ManifestLake.readChangeFeed(spark, cow, 0L, v)
-    assert(dsv2.schema.fieldNames.toSeq == twin.schema.fieldNames.toSeq)
+    val scalaFeed = ManifestLake.readChangeFeed(spark, cow, 0L, v)
+    assert(dsv2.schema.fieldNames.toSeq == scalaFeed.schema.fieldNames.toSeq)
     def typed(df: org.apache.spark.sql.DataFrame): Set[(Long, String, Long, String, Long)] =
       df.select($"doc_id", $"source", $"n_chars", $"_change_type", $"_commit_version")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           r.getString(3), r.getLong(4))).toSet
-    val a = typed(dsv2); val b = typed(twin)
-    assert(a == b, s"dsv2-only=${(a -- b).take(3)} twin-only=${(b -- a).take(3)}")
+    val a = typed(dsv2); val b = typed(scalaFeed)
+    assert(a == b, s"dsv2-only=${(a -- b).take(3)} scalaFeed-only=${(b -- a).take(3)}")
     assert(dsv2.filter($"_commit_timestamp".isNull).count() == 0,
       "every commit carries #ts — the feed's _commit_timestamp is non-null")
     // _commit_timestamp agrees with the manifest's wall time per version
     val tsByV = (1L to v).map(x =>
       x -> ManifestLake.snapshotAt(cow, x).get.tsMillis.get).toMap
-    twin.select($"_commit_version", $"_commit_timestamp").distinct().collect()
+    scalaFeed.select($"_commit_version", $"_commit_timestamp").distinct().collect()
       .foreach(r => assert(r.getTimestamp(1).getTime == tsByV(r.getLong(0))))
+    // a reference outside the feed's own scan: the V1 read, per lake
+    assertFeedRebuildsTable(mor)
+    assertFeedRebuildsTable(cow)
   }
 
   test("Scala merge with CDF records the exact three-way change record") {
@@ -700,34 +741,7 @@ class CdfSpec extends SparkSpec {
     ManifestLake.appendBatch(spark, dir, spark.range(9000, 9010)
       .select($"id".as("doc_id"), lit("s0").as("source"),
         ($"id" * 3).as("n_chars")), "source", appId = "law", batchId = 1L) // v12
-    val v = ManifestLake.latestSnapshot(dir).get.version
-
-    type K = (Long, String, Long)
-    val folded = scala.collection.mutable.Map.empty[K, Int].withDefaultValue(0)
-    ManifestLake.readChangeFeed(spark, dir, 0L, v)
-      .select($"doc_id", $"source", $"n_chars", $"_change_type", $"_commit_version")
-      .collect()
-      .sortBy(_.getLong(4)) // fold in commit order; within-version order is multiset-neutral
-      .foreach { r =>
-        val k: K = (r.getLong(0), r.getString(1), r.getLong(2))
-        r.getString(3) match {
-          case "insert" | "update_postimage" => folded(k) += 1
-          case "delete" | "update_preimage" =>
-            assert(folded(k) > 0, s"feed removes a row the fold doesn't hold: $k")
-            folded(k) -= 1
-          case other => fail(s"unexpected change type $other")
-        }
-      }
-    val table = ManifestLake.read(spark, dir)
-      .select($"doc_id", $"source", $"n_chars").collect()
-      .groupBy(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .view.mapValues(_.length).toMap
-    val rebuilt = folded.filter(_._2 > 0).toMap
-    assert(rebuilt == table,
-      s"fold-only=${(rebuilt.toSet -- table.toSet).take(3)} " +
-        s"table-only=${(table.toSet -- rebuilt.toSet).take(3)}")
-    assert(table.nonEmpty && table.values.sum.toLong ==
-      ManifestLake.read(spark, dir).count())
+    assertFeedRebuildsTable(dir)
   }
 
   test("restore on a CDF-enabled lake records the snapshot diff; feeds and streams ride through") {
@@ -1264,7 +1278,7 @@ class CdfSpec extends SparkSpec {
     * Before this pin it fell through the append default, serving the
     * inserts and silently dropping the retractions — a CDF consumer
     * CHAINED on a maintained view (a view over a view) would fold
-    * wrong change sets. Pinned on both faces (Scala twin + DSv2). */
+    * wrong change sets. Pinned on the Scala load and the DSv2 options. */
   test("replace-keys commits emit delete+insert legs — chained CDF consumers fold exactly") {
     val dir = tmp("cdf_rk")
     ManifestLake.append(spark, dir,
@@ -1286,7 +1300,7 @@ class CdfSpec extends SparkSpec {
       .option("readChangeFeed", "true")
       .option("startingVersion", "1").option("endingVersion", v.toString)
       .load()
-    assert(rows(dsv2) == rows(feed), "DSv2 face must agree with the twin")
+    assert(rows(dsv2) == rows(feed), "DSv2 options must agree with readChangeFeed")
     // the chained-consumer law: folding the full feed from zero
     // reproduces the lake state exactly
     val folded = ManifestLake.readChangeFeed(spark, dir, 0L, v)

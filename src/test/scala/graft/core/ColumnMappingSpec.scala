@@ -169,6 +169,89 @@ class ColumnMappingSpec extends SparkSpec {
     assert(ManifestLake.read(spark, dir).count() == 91L)
   }
 
+  test("renamed column: the DSv2, SQL and streaming change feeds serve it under its logical name") {
+    val dir = tmp("cm_feed_rename")
+    mkLake(dir)                                                   // v1
+    ManifestLake.renameColumn(dir, "n_chars", "chars")            // v2
+    ManifestLake.deleteWhereDv(spark, dir, $"chars" > 900)        // v3
+    ManifestLake.updateWhereDv(spark, dir, $"doc_id" === 5L,
+      Seq("chars" -> ($"chars" + 1000000L)))                      // v4
+    val v = ManifestLake.latestSnapshot(dir).get.version
+    type R = (Long, String, Long, String, Long)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[R] =
+      df.select($"doc_id", $"source", $"chars", $"_change_type", $"_commit_version")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+          r.getString(3), r.getLong(4))).toSet
+    // the model: 100 inserts, 9 deletes (chars 910..990), one update
+    def src(i: Long) = s"s${i % 2}"
+    val model: Set[R] = (0L until 100L).map(i => (i, src(i), i * 10, "insert", 1L)).toSet ++
+      (91L until 100L).map(i => (i, src(i), i * 10, "delete", 3L)) ++
+      Set[R]((5L, "s1", 50L, "update_preimage", 4L),
+        (5L, "s1", 1000050L, "update_postimage", 4L))
+    val feed = ManifestLake.readChangeFeed(spark, dir, 0L, v)
+    // committed column order, the renamed column under its logical name
+    assert(feed.columns.toSeq == Seq("doc_id", "source", "chars",
+      "_change_type", "_commit_version", "_commit_timestamp"), feed.columns.mkString(","))
+    assert(rows(feed) == model,
+      s"feed-only=${(rows(feed) -- model).take(3)} model-only=${(model -- rows(feed)).take(3)}")
+    val dsv2 = spark.read.format("graft").option("path", dir)
+      .option("readChangeFeed", "true")
+      .option("startingVersion", "0").option("endingVersion", v.toString).load()
+    assert(rows(dsv2) == model)
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW cm_feed USING graft OPTIONS " +
+      s"(path '$dir', readChangeFeed 'true', startingVersion '0', endingVersion '$v')")
+    assert(rows(spark.sql("SELECT * FROM cm_feed")) == model)
+    val streamed = new java.util.concurrent.ConcurrentLinkedQueue[R]()
+    val q = spark.readStream.format("graft").option("path", dir)
+      .option("readChangeFeed", "true").load()
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        rows(df).foreach(streamed.add); ()
+      }
+      .option("checkpointLocation", Files.createTempDirectory("cm_feed_ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try assert(q.awaitTermination(120000), "AvailableNow drain must terminate")
+    finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(streamed.asScala.toVector.sorted == model.toVector.sorted)
+  }
+
+  test("dropped columns: the DSv2 change feed hides a top-level and a nested drop") {
+    val dir = tmp("cm_feed_drop")
+    val df = spark.range(0, 100).select(
+      $"id".as("doc_id"),
+      concat(lit("s"), ($"id" % 2).cast("string")).as("source"),
+      ($"id" * 10).as("n_chars"),
+      struct(
+        concat(lit("l"), ($"id" % 3).cast("string")).as("lang"),
+        ($"id" * 2).as("score"),
+        concat(lit("x"), $"id".cast("string")).as("extra")).as("meta"))
+    ManifestLake.append(spark, dir, df, "source",
+      maxRecordsPerFile = 32L, statsCols = Seq("doc_id"))         // v1
+    ManifestLake.dropColumn(dir, "n_chars")                       // v2
+    ManifestLake.dropColumn(dir, Seq("meta", "extra"))            // v3
+    ManifestLake.deleteWhereDv(spark, dir, $"doc_id" % 10 === 3)  // v4
+    val v = ManifestLake.latestSnapshot(dir).get.version
+    val feed = spark.read.format("graft").option("path", dir)
+      .option("readChangeFeed", "true")
+      .option("startingVersion", "0").option("endingVersion", v.toString).load()
+    assert(!feed.columns.contains("n_chars"), feed.columns.mkString(","))
+    val meta = feed.schema(feed.schema.fieldIndex("meta")).dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(meta.fieldNames.toSeq == Seq("lang", "score"), meta.sql)
+    val got = feed.select($"doc_id", $"source", $"meta.lang", $"meta.score",
+        $"_change_type")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getLong(3), r.getString(4))).toSet
+    def row(i: Long, t: String) = (i, s"s${i % 2}", s"l${i % 3}", i * 2, t)
+    val model = (0L until 100L).map(row(_, "insert")).toSet ++
+      (0L until 100L).filter(_ % 10 == 3).map(row(_, "delete"))
+    assert(got == model,
+      s"feed-only=${(got -- model).take(3)} model-only=${(model -- got).take(3)}")
+    assert(ManifestLake.readChangeFeed(spark, dir, 0L, v).columns.toSeq == feed.columns.toSeq)
+  }
+
   test("SQL face: ALTER TABLE RENAME/DROP COLUMN; SELECT, INSERT, UPDATE, DELETE all translate; time travel era-correct") {
     val dir = tmp("cm_sql")
     mkLake(dir)                                                   // v1

@@ -385,6 +385,23 @@ class DvSpec extends SparkSpec {
       "update-dv must be CDC-invisible")
   }
 
+  test("readChanges applies the window-end deletion vectors, like the DSv2 CDC window") {
+    import spark.implicits._
+    val dir = tmp("dv_cdc_window")
+    def slice(lo: Long, hi: Long) = spark.range(lo, hi).select($"id".as("doc_id"),
+      lit("s0").as("source"), ($"id" * 10).as("n_chars"))
+    ManifestLake.append(spark, dir, slice(0, 50), "source")     // v1
+    ManifestLake.append(spark, dir, slice(50, 80), "source")    // v2
+    ManifestLake.deleteWhereDv(spark, dir, $"doc_id" >= 60)     // v3
+    val changes = ManifestLake.readChanges(spark, dir, 0L, 3L)
+    assert(changes.count() == 60L, "rows a DV in the window deleted must not appear")
+    assert(changes.agg(min($"doc_id"), max($"doc_id")).head() ===
+      org.apache.spark.sql.Row(0L, 59L))
+    assert(spark.read.format("graft").option("path", dir)
+      .option("startingVersion", "0").option("endingVersion", "3")
+      .load().count() == 60L)
+  }
+
   test("Scala/CALL DML detection is manifest-pruned: out-of-range files never open") {
     import spark.implicits._
     val dir = tmp("dv_prune")

@@ -982,6 +982,30 @@ class LayoutSpec extends SparkSpec {
       docs.agg(sum($"doc_id")).head().getLong(0))
   }
 
+  test("manifest lake: vacuum takes each reclaimed file's .crc checksum twin along") {
+    val dir = Files.createTempDirectory("mlake_crc").resolve("lake").toString
+    val root = java.nio.file.Paths.get(dir)
+    ManifestLake.append(spark, dir, spark.range(0, 200).select($"id".as("doc_id"),
+      concat(lit("s"), ($"id" % 2).cast("string")).as("source"),
+      ($"id" * 10).as("n_chars")), "source", maxRecordsPerFile = 15L)
+    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    spark.sql(s"UPDATE graft.`$dir` SET n_chars = -n_chars WHERE doc_id % 20 = 3")
+    ManifestLake.compact(spark, dir, "source", targetRecordsPerFile = 1000L)
+    assert(ManifestLake.vacuum(dir, keepVersions = 1, graceMillis = 0L) > 0L)
+    def listed(d: java.nio.file.Path): Vector[String] = {
+      val st = Files.list(d)
+      try st.iterator().asScala.map(_.getFileName.toString).toVector finally st.close()
+    }
+    val orphans = Seq("source=s0", "source=s1").flatMap { p =>
+      val names = listed(root.resolve(p))
+      names.filter(n => n.startsWith(".") && n.endsWith(".crc"))
+        .filterNot(n => names.contains(n.drop(1).dropRight(".crc".length)))
+        .map(n => s"$p/$n")
+    }
+    assert(orphans.isEmpty, s"checksum twins outlived their parquet files: $orphans")
+    assert(ManifestLake.read(spark, dir).count() == 200L)
+  }
+
   test("one row group ordering: sortWithinPartitions keeps (model, vid) runs") {
     val dir = Files.createTempDirectory("lake2").resolve("scores").toString
     val scores = spark.range(0, 500).select(
